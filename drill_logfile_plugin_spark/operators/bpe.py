@@ -209,39 +209,40 @@ def bpe_train(
     # local-vs-reliable knob), bounding the recompute cascade an evicted
     # cache partition / lost executor could trigger.
     pinned: list[DataFrame] = []
-    # The round ladder runs without AQE (dedup._iteration_latency_mode):
-    # each argmax is one job over cached vocab-sized partitions instead
-    # of several per-stage driver round-trips; the corpus-sized pass
-    # above stays outside the guard, where AQE keeps its value.
-    from .dedup import _iteration_latency_mode
+    # The round ladder runs in a ladder session (dedup._ladder_session,
+    # AQE off): each argmax is one job over cached vocab-sized
+    # partitions instead of several per-stage driver round-trips; the
+    # corpus-sized pass above stays in the caller's session, where AQE
+    # keeps its value.
+    from .dedup import _ladder_session
 
-    with _iteration_latency_mode(df.sparkSession):
-        for r in range(n_merges):
-            best = (
-                _adjacent_pair_counts(words)
-                .orderBy(F.desc("freq"), F.asc("a"), F.asc("b"))
-                .limit(1)
-                .collect()
-            )
-            # the argmax just materialized `words`; its predecessor's
-            # cache partitions are now dead weight
-            if len(pinned) > 1:
-                pinned.pop(0).unpersist()
-            if not best or best[0]["freq"] < min_freq:
-                break
-            a, b, freq = best[0]["a"], best[0]["b"], int(best[0]["freq"])
-            merges.append((a, b, freq))
-            words = words.withColumn("s", _merge_fold(F.col("s"), a, b))
-            if (r + 1) % barrier_every == 0:
-                # the eager checkpoint materializes NOW, through the
-                # pinned predecessors — after it they are all dead weight
-                words = _barrier(words)
-                for p in pinned:
-                    p.unpersist()
-                pinned.clear()
-            else:
-                words = words.persist()
-                pinned.append(words)
+    words, home = _ladder_session(words)
+    for r in range(n_merges):
+        best = (
+            _adjacent_pair_counts(words)
+            .orderBy(F.desc("freq"), F.asc("a"), F.asc("b"))
+            .limit(1)
+            .collect()
+        )
+        # the argmax just materialized `words`; its predecessor's
+        # cache partitions are now dead weight
+        if len(pinned) > 1:
+            pinned.pop(0).unpersist()
+        if not best or best[0]["freq"] < min_freq:
+            break
+        a, b, freq = best[0]["a"], best[0]["b"], int(best[0]["freq"])
+        merges.append((a, b, freq))
+        words = words.withColumn("s", _merge_fold(F.col("s"), a, b))
+        if (r + 1) % barrier_every == 0:
+            # the eager checkpoint materializes NOW, through the
+            # pinned predecessors — after it they are all dead weight
+            words = _barrier(words)
+            for p in pinned:
+                p.unpersist()
+            pinned.clear()
+        else:
+            words = words.persist()
+            pinned.append(words)
     # leave the final state materialized for the caller (vocab/sum reads),
     # but drop every other pin. `p is not words` (not `pinned[:-1]`):
     # when the last executed round took the barrier branch or the loop
@@ -250,7 +251,7 @@ def bpe_train(
     for p in pinned:
         if p is not words:
             p.unpersist()
-    return merges, words
+    return merges, home(words)
 
 
 def _merge_fold(s: Column, a: str, b: str) -> Column:

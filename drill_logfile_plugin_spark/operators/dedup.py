@@ -77,7 +77,7 @@ def _est_scan_splits(df: DataFrame) -> int:
     ``getNumPartitions`` (see :func:`_spread`'s docstring for the whys
     and the scan-rooted precondition). Returns 0 when the source is not
     file-backed or stats are unavailable — callers must treat 0 as
-    UNKNOWN (spread to be safe, keep AQE, ...), never as "empty"."""
+    UNKNOWN (spread to be safe), never as "empty"."""
     try:
         est = len(df.inputFiles())
         par = df.sparkSession.sparkContext.defaultParallelism
@@ -145,12 +145,10 @@ def _barrier(df: DataFrame) -> DataFrame:
     ):
         cached = df.persist()
         try:
-            with _ambient_plan_window(spark):
-                return cached.checkpoint(eager=True)
+            return cached.checkpoint(eager=True)
         finally:
             cached.unpersist()
-    with _ambient_plan_window(spark):
-        return df.localCheckpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _lazy_barrier(df: DataFrame) -> DataFrame:
@@ -184,151 +182,72 @@ def _lazy_barrier(df: DataFrame) -> DataFrame:
         != "false"
     ):
         return _barrier(df)
-    with _ambient_plan_window(spark):
-        return df.localCheckpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
-_LATENCY_LOCK = __import__("threading").Lock()
-_LATENCY_STATE: dict = {}
+def _ladder_session(df: DataFrame):
+    """Move ``df`` into a LADDER SESSION: a clone of its session with AQE
+    off and ladder-width shuffles. Returns ``(moved_df, home)``, where
+    ``home(frame)`` moves a ladder result back to the caller's session.
 
+    Trainer loops (BPE/WordPiece merge rounds, unigram EM) and the graph
+    contractions (dup_clusters, pagerank) submit one tiny job per round
+    over cached or checkpointed vocab/pair-graph-sized frames. AQE turns
+    each of those queries into several driver round-trips (one job per
+    materialized query stage + the final job) to earn runtime
+    re-planning that such a frame never needs — its joins are hash-
+    joinable either way and there is no skew to split. Measured on the
+    sf0.1 corpus (warm session): the 7-round BPE+WordPiece ladder drops
+    34 -> 11 jobs and ~3.4 -> ~2.2 s with merges bit-identical. This is
+    NOT a local-mode constant: every AQE stage costs a driver scheduling
+    round-trip on a cluster too, and the ladder is latency-bound by
+    construction (the corpus-sized passes stay in the caller's session,
+    where AQE coalescing/skew handling keep their value). The shuffle
+    width is ``max(4, defaultParallelism // 4)`` (the trainers'
+    ``round_partitions`` sizing, cluster-proportional); ladder
+    aggregates are integer-exact (argmax over integer counts, integer
+    min/sum folds), so neither AQE nor partition count can change a
+    value.
 
-def _ambient_plan_window(spark):
-    """Context manager: freeze a plan under AMBIENT confs even while an
-    :func:`_iteration_latency_mode` guard is active on the session.
+    Why a session and not a conf flip: Spark plans capture SQL confs at
+    freeze time, so flipping the caller's session would pin every plan
+    another thread freezes meanwhile to ladder geometry. The clone has
+    its own SQLConf and shares the SparkContext and the cache, so plans
+    frozen anywhere else keep the caller's confs, and the caller's
+    session is never written. It is a CLONE, not ``newSession()``: a
+    new session starts from the static defaults (ANSI on, 200 shuffle
+    partitions, JVM timezone), while the clone carries the caller's
+    confs (``configure_session``'s ANSI/timezone settings, the
+    :data:`RELIABLE_CHECKPOINT_CONF` knob). Cloning takes ~3 ms (4-core
+    local[4] driver).
 
-    The guard flips session-global SQLConf (AQE off, ladder-width shuffle
-    partitions) for the duration of a trainer/contraction ladder. Spark
-    physical plans capture those confs at FREEZE time (``toRdd`` — every
-    eager/lazy ``localCheckpoint``), so a NON-ladder plan frozen by a
-    concurrent thread inside the guard window would be silently pinned to
-    ladder geometry: a corpus-scale frame at ``max(4, parallelism//4)``
-    partitions with no AQE coalescing/skew handling (the r11-advice
-    hazard: q50's main thread freezing the bigram arm while the trainer
-    thread holds the guard). This window makes :func:`_barrier` /
-    :func:`_lazy_barrier` freezes from non-holder threads restore the
-    saved ambient confs around the freeze, under the guard lock so guard
-    transitions cannot interleave.
-
-    Residual (bounded, documented): a HOLDER thread that finalizes a
-    ladder plan in the same instant reads ambient confs and plans that
-    one step under AQE — a few extra scheduler round-trips for that
-    step, values identical (ladder aggregates are integer-exact). The
-    asymmetric risk is deliberate: a mis-planned ladder step costs
-    milliseconds once; a corpus frame frozen at ladder width costs a
-    full-scale pass its parallelism.
+    Frames cross sessions by their analyzed plan through
+    ``Dataset.ofRows`` — the one internal-API use in the package
+    (``org.apache.spark.sql.classic`` on Spark 4,
+    ``org.apache.spark.sql`` on 3.5). Moved inputs should be
+    checkpointed or cached, so the ladder reads their rows rather than
+    re-planning their lineage; moved-back results are plain frames of
+    the caller's session (lazy checkpoints included, materializing in
+    the caller's consuming action).
     """
-    import threading
-    from contextlib import contextmanager, nullcontext
+    from py4j.java_gateway import JavaClass
 
-    key = id(spark)
-    st = _LATENCY_STATE.get(key)
-    if st is None or threading.get_ident() in st[2]:
-        return nullcontext()
+    home = df.sparkSession
+    ladder = type(home)(home.sparkContext, home._jsparkSession.cloneSession())
+    ladder.conf.set("spark.sql.adaptive.enabled", "false")
+    ladder.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(max(4, home.sparkContext.defaultParallelism // 4)),
+    )
+    dataset = home._jvm.org.apache.spark.sql.classic.Dataset
+    if not isinstance(dataset, JavaClass):
+        dataset = home._jvm.org.apache.spark.sql.Dataset
 
-    @contextmanager
-    def _window():
-        with _LATENCY_LOCK:
-            st = _LATENCY_STATE.get(key)
-            if st is None:
-                yield
-                return
-            _, saved, _holders = st
-            spark.conf.set("spark.sql.adaptive.enabled", saved[0])
-            spark.conf.set("spark.sql.shuffle.partitions", saved[1])
-            try:
-                yield
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                spark.conf.set("spark.sql.shuffle.partitions", saved[2])
+    def move(frame: DataFrame, session) -> DataFrame:
+        plan = frame._jdf.queryExecution().analyzed()
+        return DataFrame(dataset.ofRows(session._jsparkSession, plan), session)
 
-    return _window()
-
-
-def _iteration_latency_mode(spark, shuffle_partitions: int | None = None):
-    """Context manager: run a driver-sequential ladder of vocab-sized
-    jobs without AQE's per-stage re-planning.
-
-    Trainer loops (BPE/WordPiece merge rounds, unigram EM) submit one
-    tiny argmax/fold job per round over cached vocab-sized tables. AQE
-    turns each of those queries into several driver round-trips (one
-    job per materialized query stage + the final job) to earn runtime
-    re-planning that a vocab-sized frame never needs — its partition
-    count is already fixed by ``round_partitions``, its joins are
-    hash-joinable either way, and there is no skew to split. Measured
-    on the sf0.1 corpus (warm session): the 7-round BPE+WordPiece
-    ladder drops 34 -> 11 jobs and ~3.4 -> ~2.2 s with merges
-    bit-identical. This is NOT a local-mode constant: every AQE stage
-    costs a driver scheduling round-trip on a cluster too, and the
-    ladder is latency-bound by construction (the corpus-sized pass
-    stays OUTSIDE the guard, where AQE coalescing/skew handling keep
-    their value).
-
-    Also shrinks ``spark.sql.shuffle.partitions`` to the ladder scale
-    (``max(4, defaultParallelism // 4)`` — the ``round_partitions``
-    sizing, cluster-proportional, not a local constant): every ladder
-    job's reduce stage schedules that many tasks instead of the
-    session's corpus-sized count, and with AQE off nothing else
-    re-coalesces them. Ladder aggregates are integer-exact by the
-    engine's determinism policy (argmax over integer counts, integer
-    min/sum folds), so partition count cannot change any value.
-
-    ``shuffle_partitions`` overrides the ladder width for ladders whose
-    per-job frames are NOT vocab/frontier-sized — e.g. the size-gated
-    small-corpus LSH candidate pipeline hand-sizes its banding shuffle
-    to ``defaultParallelism`` (one reduce partition per core, the same
-    width its ``_spread`` round-robin uses) instead of the //4 ladder
-    width. First entry wins on nesting (reentrant guards share one conf
-    snapshot).
-
-    Reentrant and thread-safe per session (the q50 pattern trains two
-    tokenizers on concurrent threads): the confs flip on first entry
-    and restore on last exit. Holder thread ids are tracked so
-    :func:`_ambient_plan_window` can tell a ladder freeze (keep guard
-    confs) from a concurrent non-ladder freeze (restore ambient).
-    """
-    import threading
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _guard():
-        key = id(spark)
-        width = str(
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else max(4, spark.sparkContext.defaultParallelism // 4)
-        )
-        tid = threading.get_ident()
-        with _LATENCY_LOCK:
-            depth, saved, holders = _LATENCY_STATE.get(key, (0, None, {}))
-            if depth == 0:
-                saved = (
-                    spark.conf.get("spark.sql.adaptive.enabled", "true"),
-                    spark.conf.get("spark.sql.shuffle.partitions", "200"),
-                    width,
-                )
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                spark.conf.set("spark.sql.shuffle.partitions", width)
-            holders = dict(holders)
-            holders[tid] = holders.get(tid, 0) + 1
-            _LATENCY_STATE[key] = (depth + 1, saved, holders)
-        try:
-            yield
-        finally:
-            with _LATENCY_LOCK:
-                depth, saved, holders = _LATENCY_STATE[key]
-                if depth == 1:
-                    spark.conf.set("spark.sql.adaptive.enabled", saved[0])
-                    spark.conf.set("spark.sql.shuffle.partitions", saved[1])
-                    del _LATENCY_STATE[key]
-                else:
-                    holders = dict(holders)
-                    if holders.get(tid, 0) <= 1:
-                        holders.pop(tid, None)
-                    else:
-                        holders[tid] -= 1
-                    _LATENCY_STATE[key] = (depth - 1, saved, holders)
-
-    return _guard()
+    return move(df, ladder), lambda out: move(out, home)
 
 
 def _probed_barrier(df: DataFrame, metric):
@@ -629,20 +548,6 @@ def lsh_candidate_pairs(
     # minhash_bands; the spread happens HERE because the re-rank below
     # reuses the same spread frame. Empty-shingle docs are excluded in
     # minhash_bands (see its docstring for both whys).
-    #
-    # Small-corpus gate (r12, guide §2): when the scan metadata says the
-    # corpus has at most one split per core, AQE's per-stage re-planning
-    # buys nothing the plan cannot be hand-sized for — the spread width
-    # IS defaultParallelism, the banding shuffle fans out over that same
-    # width, and there is no skew a 64-bucket-per-doc band table can
-    # accumulate at that volume. Ambient AQE turned the candidate
-    # barrier into one driver round-trip per exchange (4 jobs measured);
-    # under the guard it is ONE job at the hand-sized width. A real
-    # multi-split corpus keeps ambient AQE with its coalescing/skew
-    # handling — the gate is metadata-only and cluster-proportional.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    est_splits = _est_scan_splits(df)
-    small_corpus = 0 < est_splits <= par
     df = _spread(df)
     banded = minhash_bands(
         df, text_col, id_col, shingle_n, num_hashes, bands, spread=False
@@ -675,32 +580,24 @@ def lsh_candidate_pairs(
     # where the eager job computes it exactly once up front. It is
     # O(duplicate pairs) — tiny at any corpus scale; see _barrier for
     # the local-vs-reliable fault-domain knob.
-    from contextlib import nullcontext
-
-    guard = (
-        _iteration_latency_mode(df.sparkSession, shuffle_partitions=par)
-        if small_corpus
-        else nullcontext()
-    )
-    with guard:
-        cand, n_cand = _probed_barrier(
-            a.join(
-                # shuffled-hash over sort-merge (r11, guide §3): both sides
-                # share one exchange (ReuseExchange) but SMJ pays two
-                # identical sorts over it; the per-partition hash build
-                # skips both. Isolated q27 min-of-6: 1.98 -> 1.34 s.
-                b.hint("shuffle_hash"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct(),
-            F.count(F.lit(1)).alias("n"),
+    cand, n_cand = _probed_barrier(
+        a.join(
+            # shuffled-hash over sort-merge (r11, guide §3): both sides
+            # share one exchange (ReuseExchange) but SMJ pays two
+            # identical sorts over it; the per-partition hash build
+            # skips both. Isolated q27 min-of-6: 1.98 -> 1.34 s.
+            b.hint("shuffle_hash"),
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
+        .distinct(),
+        F.count(F.lit(1)).alias("n"),
+    )
     # Exact re-rank: build string shingle sets ONLY for docs that appear in
     # a candidate pair (a left-semi prefilter) — candidate counts are
     # O(duplicates), so this is a tiny fraction of the corpus. The
@@ -1546,7 +1443,6 @@ def dup_clusters(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 25,
-    edges_hint: int | None = None,
 ) -> DataFrame:
     """Connected components over a duplicate-pair graph: (doc_id, cluster_id).
 
@@ -1595,81 +1491,60 @@ def dup_clusters(
                 "e.g. xxhash64(id), so the pair graph cannot silently "
                 "collapse to NULLs)"
             )
-    from contextlib import nullcontext
-
-    # ``edges_hint`` is an optional caller-provided UPPER bound on the
-    # pair count (e.g. the probe riding the caller's own barrier job,
-    # q63) — a pure perf hint with the _probed_barrier inflate-only
-    # contract: when it says the graph is small, the ENTRY barrier below
-    # also runs under the AQE-off guard (its subtree is a distinct over
-    # the caller's already-materialized pairs — one job instead of one
-    # per AQE stage); an inflated hint only keeps ambient AQE. Without a
-    # hint the entry barrier stays under ambient AQE, because its input
-    # subtree can be the full corpus-sized candidate pipeline.
-    entry_guard = (
-        _iteration_latency_mode(pairs.sparkSession)
-        if edges_hint is not None
-        and 0 < 2 * edges_hint <= BROADCAST_FRONTIER_ROWS
-        else nullcontext()
-    )
-    with entry_guard:
-        e, n_edges = _probed_barrier(
-            pairs.select(
-                F.col(id_a).cast("long").alias("src"),
-                F.col(id_b).cast("long").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct(),
-            F.count(F.lit(1)).alias("n"),
+    # The entry barrier stays in the caller's session: its input subtree
+    # can be the full corpus-sized candidate pipeline, where ambient AQE
+    # keeps its value.
+    e, n_edges = _probed_barrier(
+        pairs.select(
+            F.col(id_a).cast("long").alias("src"),
+            F.col(id_b).cast("long").alias("dst"),
         )
+        .where(F.col("src") != F.col("dst"))
+        .distinct(),
+        F.count(F.lit(1)).alias("n"),
+    )
     # The contraction ladder is a driver-sequential chain of tiny probed-
     # barrier jobs (shortcut rounds, edge rewrites); with AQE on, each
     # becomes several per-stage driver round-trips that a pair-graph-sized
-    # frame never needs (the trainer-ladder lesson, _iteration_latency_mode)
-    # — and even the LAZY barriers finalize their adaptive plans at
-    # construction (toRdd), running one stage job per subtree shuffle.
-    # Size-gated on the probed edge count: in the broadcast regime the
-    # rounds are pure scheduler latency, so AQE re-planning is all cost;
-    # a pathologically huge pair graph keeps AQE's coalescing/skew tools.
-    # The corpus-sized candidate pipeline above materialized under ambient
-    # AQE in the entry barrier (unless the caller's hint bounded it), so
-    # only iteration jobs run under the guard.
-    guard = (
-        _iteration_latency_mode(pairs.sparkSession)
-        if n_edges and 2 * n_edges <= BROADCAST_FRONTIER_ROWS
-        else nullcontext()
-    )
-    with guard:
-        # node -> current label; labels start as the node id itself. Lazy:
-        # nothing reads these rows until the first relabel join's consumer
-        # (or the caller's action when the graph is empty) materializes
-        # them.
-        labels = _lazy_barrier(
-            e.select(F.col("src").alias("node"))
-            .union(e.select("dst"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-        )
-        labels = _run_contraction(labels, e, n_edges, max_iter)
+    # frame never needs (see _ladder_session) — and even the LAZY barriers
+    # finalize their adaptive plans at construction (toRdd), running one
+    # stage job per subtree shuffle. Size-gated on the probed edge count:
+    # in the broadcast regime the rounds are pure scheduler latency, so
+    # AQE re-planning is all cost; a pathologically huge pair graph keeps
+    # AQE's coalescing/skew tools in the caller's session.
+    if n_edges and 2 * n_edges <= BROADCAST_FRONTIER_ROWS:
+        e, home = _ladder_session(e)
+        labels = home(_run_contraction(e, n_edges, max_iter))
+    else:
+        labels = _run_contraction(e, n_edges, max_iter)
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 
-def _run_contraction(labels, e, n_edges, max_iter):
-    """The hook/shortcut/relabel loop of :func:`dup_clusters` (split out
-    so the AQE guard wraps exactly the iteration jobs)."""
+def _run_contraction(e, n_edges, max_iter):
+    """The hook/shortcut/relabel loop of :func:`dup_clusters`: the
+    (node, label) map of edge list ``e``."""
+    # node -> current label; labels start as the node id itself. Lazy:
+    # nothing reads these rows until the first relabel join's consumer
+    # (or the caller's action when the graph is empty) materializes them.
+    labels = _lazy_barrier(
+        e.select(F.col("src").alias("node"))
+        .union(e.select("dst"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+    )
 
     def _shortcut(m: DataFrame, frontier_rows: int) -> DataFrame:
         """Pointer-jump an old→new map (new <= old) to its fixpoint.
 
-        One Spark job per composition ROUND, and nothing else: in the
-        small (guarded) regime every hop is a plain in-job shuffle join
-        at ladder width — r11's broadcast hints were measured in r12 to
-        COST jobs here, because a frozen plan's BroadcastExchange
-        materializes its build side as a blocking driver job at freeze
-        time (2-4 jobs per round instead of 1), while a frontier-sized
-        SMJ at ladder width runs entirely inside the barrier job. The
-        large regime was always plain joins (the broadcast gate and the
-        guard share the frontier threshold).
+        One barrier job per composition ROUND. The hops carry no
+        broadcast hint: a BroadcastExchange runs its build side as a
+        driver job of its own, ahead of the plan that uses it
+        (tests/test_r12_advice.py::test_ladder_lazy_barrier_freeze_jobs
+        pins this), while a shuffle join at ladder width runs inside the
+        barrier job. The planner still broadcasts a hop whose map's size
+        estimate is under ``autoBroadcastJoinThreshold`` — a checkpoint
+        keeps its source plan's estimate — and that hop then costs the
+        build job, hint or not.
 
         A round chains SEVERAL hops against the same map in the small
         regime, so the collapsed jump distance grows as (hops+1)^rounds
@@ -1733,12 +1608,12 @@ def _run_contraction(labels, e, n_edges, max_iter):
         # them), so the former eager form serialized one pure-latency
         # job per round; the lazy checkpoint still caps lineage at
         # depth-1 per round once the consuming action materializes it.
-        # Plain joins, not broadcasts (r12): a broadcast inside a frozen
-        # plan materializes its build side as a blocking driver job at
-        # freeze time — the lazy barrier then costs one job per round
-        # for the map build alone, where a frontier-sized shuffle join
-        # at ladder width freezes for free and joins inside the
-        # consuming action (see _shortcut's docstring for the A/B).
+        # No broadcast hint: a broadcast inside the frozen plan runs its
+        # build side as a job while this barrier is BUILT, where a
+        # shuffle join freezes with no job and runs inside the consuming
+        # action. A map whose carried size estimate is under
+        # autoBroadcastJoinThreshold is broadcast by the planner anyway,
+        # so then the build job stays (see _shortcut's docstring).
         labels = _lazy_barrier(
             labels.join(
                 nbr_min,

@@ -57,7 +57,6 @@ def pagerank(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     symmetric: bool = True,
-    edges_hint: int | None = None,
 ) -> DataFrame:
     """Fixed-``iterations`` integer PageRank over an edge list.
 
@@ -90,72 +89,45 @@ def pagerank(
     # and honors the reliable-checkpoint knob (see dedup._barrier).
     from .dedup import (
         BROADCAST_FRONTIER_ROWS,
+        _ladder_session,
         _probed_barrier,
     )
 
-    from contextlib import nullcontext
-
-    from .dedup import _iteration_latency_mode
-
-    # ``edges_hint``: optional caller-provided UPPER bound on the pair
-    # count (same perf-hint contract as dup_clusters' — inflate-only,
-    # plans not values). When it bounds the graph small, the entry
-    # barrier's distinct — over the caller's already-materialized pairs
-    # — runs under the AQE-off guard as ONE job; without a hint it keeps
-    # ambient AQE because its input subtree can be the full corpus-sized
-    # candidate pipeline. The symmetric union doubles rows before
-    # distinct, hence the 2x in the caller-facing bound's comparison.
-    entry_guard = (
-        _iteration_latency_mode(pairs.sparkSession)
-        if edges_hint is not None
-        and 0 < 4 * edges_hint <= BROADCAST_FRONTIER_ROWS
-        else nullcontext()
-    )
-    with entry_guard:
-        e, n_edges = _probed_barrier(
-            e.distinct(), F.count(F.lit(1)).alias("n")
-        )
+    e, n_edges = _probed_barrier(e.distinct(), F.count(F.lit(1)).alias("n"))
     # The iteration constructions below chain LAZY barriers; under AQE,
     # even a lazy localCheckpoint finalizes its adaptive plan at
     # CONSTRUCTION time (toRdd), running one stage-materialization job
     # per shuffle in the subtree — pure driver latency for node-sized
     # frames. In the small regime (same gate as the ladder's plain-join
-    # choice) build the whole ladder with AQE off so every deferred RDD
-    # materializes inside the consuming action instead; a huge graph
-    # keeps AQE. Empty graphs skip the guard like dup_clusters does —
-    # flipping session confs around an empty ladder is pure overhead.
-    guard = (
-        _iteration_latency_mode(pairs.sparkSession)
-        if n_edges and 2 * n_edges <= BROADCAST_FRONTIER_ROWS
-        else nullcontext()
-    )
-    with guard:
-        return _pagerank_ladder(e, n_edges, iterations, damping)
+    # choice) the whole ladder is built in a ladder session (AQE off,
+    # see dedup._ladder_session), so every deferred RDD materializes
+    # inside the consuming action instead; a huge graph keeps AQE, and
+    # an empty one skips the session like dup_clusters does.
+    if n_edges and 2 * n_edges <= BROADCAST_FRONTIER_ROWS:
+        e, home = _ladder_session(e)
+        return home(_pagerank_ladder(e, n_edges, iterations, damping))
+    return _pagerank_ladder(e, n_edges, iterations, damping)
 
 
 def _pagerank_ladder(
     e: DataFrame, n_edges: int, iterations: int, damping: float
 ) -> DataFrame:
-    """The deg/nodes/iteration constructions of :func:`pagerank` (split
-    out so the AQE guard wraps exactly the ladder)."""
+    """The deg/nodes/iteration constructions of :func:`pagerank`."""
     from .dedup import (
         BROADCAST_FRONTIER_ROWS,
         _lazy_barrier,
     )
 
     base = round((1.0 - damping) * SCALE)
-    # deg and the per-iteration rank tables are node-sized (<= 2x edges).
-    # r11 broadcast them below the frontier threshold; r12 measured that
-    # trade and reversed it: a BroadcastExchange inside a plan being
-    # FROZEN (the lazy barriers below, toRdd) materializes its build
-    # side as a blocking driver job at freeze time — two jobs per
-    # barriered iteration (deg + the rank table), 4 of pagerank's 6
-    # construction jobs. Plain equi joins freeze for free and run at
-    # ladder width inside the CONSUMING action, where the scheduler
-    # overlaps them with whatever else that action runs (q63: the
-    # clusters arm). Above the frontier the hint was inactive anyway,
-    # so the plan there is unchanged — shuffling the checkpointed edges
-    # once per iteration is bounded by the small regime's gate.
+    # deg and the per-iteration rank tables are node-sized (<= 2x edges)
+    # and carry no broadcast hint: a BroadcastExchange inside a plan
+    # being FROZEN (the lazy barriers below, toRdd) runs its build side
+    # as a driver job at freeze time (tests/test_r12_advice.py::
+    # test_ladder_lazy_barrier_freeze_jobs), where a shuffle join
+    # freezes with no job and runs inside the CONSUMING action, which
+    # overlaps it with whatever else that action runs (q63: the clusters
+    # arm). The planner still broadcasts a side whose carried size
+    # estimate is under autoBroadcastJoinThreshold, hint or not.
     # deg is consumed by every iteration's contrib join; the LAZY
     # barrier (one checkpoint-marked RDD) means each iteration reads
     # the materialized node-sized frame instead of re-aggregating the

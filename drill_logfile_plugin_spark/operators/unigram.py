@@ -246,19 +246,16 @@ def unigram_train(
         model = UnigramModel(pieces, logp, max_piece_len)
 
         # --- EM + prune rounds until the target size. The ladder runs
-        # without AQE (dedup._iteration_latency_mode): each E-step is
-        # one job over the cached word-type partitions instead of
-        # several per-stage driver round-trips; the corpus-sized seed
-        # pass above stays outside the guard.
-        from contextlib import ExitStack
+        # in a ladder session (dedup._ladder_session, AQE off): each
+        # E-step is one job over the cached word-type partitions instead
+        # of several per-stage driver round-trips; the corpus-sized seed
+        # pass above stays in the caller's session.
+        from .dedup import _ladder_session
 
-        from .dedup import _iteration_latency_mode
-
-        _em_stack = ExitStack()
-        _em_stack.enter_context(_iteration_latency_mode(df.sparkSession))
+        em_words, _ = _ladder_session(words)
         while True:
             for _ in range(em_iters):
-                counts = _estep(words, model)
+                counts = _estep(em_words, model)
                 model = UnigramModel(
                     model.pieces,
                     _mstep(counts, model.pieces),
@@ -266,7 +263,7 @@ def unigram_train(
                 )
             if len(model.pieces) <= vocab_size:
                 break
-            counts = _estep(words, model)
+            counts = _estep(em_words, model)
             multi = [p for p in model.pieces if len(p) > 1]
             n_single = len(model.pieces) - len(multi)
             target_multi = max(vocab_size - n_single, 0)
@@ -290,17 +287,12 @@ def unigram_train(
             ]
             model = UnigramModel(kept, kept_logp, max_piece_len)
         # final renormalizing EM pass
-        counts = _estep(words, model)
+        counts = _estep(em_words, model)
         model = UnigramModel(
             model.pieces, _mstep(counts, model.pieces), max_piece_len
         )
-        _em_stack.close()
     finally:
         words.unpersist()
-        try:
-            _em_stack.close()  # no-op when already closed above
-        except NameError:
-            pass  # seed-phase failure before the stack existed
     return model
 
 

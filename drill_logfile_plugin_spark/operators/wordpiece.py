@@ -166,54 +166,55 @@ def wordpiece_train(
         )
     merges: list[tuple[str, str, float]] = []
     pinned: list[DataFrame] = []
-    # Round ladder without AQE — one job per argmax over cached
-    # vocab-sized partitions (see bpe_train / dedup._iteration_latency_mode).
-    from .dedup import _iteration_latency_mode
+    # Round ladder in a ladder session (AQE off) — one job per argmax
+    # over cached vocab-sized partitions (see bpe_train /
+    # dedup._ladder_session).
+    from .dedup import _ladder_session
 
-    with _iteration_latency_mode(df.sparkSession):
-        for r in range(n_merges):
-            pairs = _adjacent_pair_counts(words).where(
-                F.col("freq") >= min_freq
+    words, home = _ladder_session(words)
+    for r in range(n_merges):
+        pairs = _adjacent_pair_counts(words).where(
+            F.col("freq") >= min_freq
+        )
+        syms = _symbol_freqs(words)
+        best = (
+            pairs.alias("p")
+            .join(syms.alias("fa"), F.col("p.a") == F.col("fa.symbol"))
+            .join(syms.alias("fb"), F.col("p.b") == F.col("fb.symbol"))
+            .select(
+                "p.a",
+                "p.b",
+                (
+                    F.col("p.freq").cast("double")
+                    / (
+                        F.col("fa.freq").cast("double")
+                        * F.col("fb.freq").cast("double")
+                    )
+                ).alias("score"),
             )
-            syms = _symbol_freqs(words)
-            best = (
-                pairs.alias("p")
-                .join(syms.alias("fa"), F.col("p.a") == F.col("fa.symbol"))
-                .join(syms.alias("fb"), F.col("p.b") == F.col("fb.symbol"))
-                .select(
-                    "p.a",
-                    "p.b",
-                    (
-                        F.col("p.freq").cast("double")
-                        / (
-                            F.col("fa.freq").cast("double")
-                            * F.col("fb.freq").cast("double")
-                        )
-                    ).alias("score"),
-                )
-                .orderBy(F.desc("score"), F.asc("a"), F.asc("b"))
-                .limit(1)
-                .collect()
-            )
-            if len(pinned) > 1:
-                pinned.pop(0).unpersist()
-            if not best:
-                break
-            a, b, score = best[0]["a"], best[0]["b"], float(best[0]["score"])
-            merges.append((a, b, score))
-            words = words.withColumn("s", _merge_fold(F.col("s"), a, b))
-            if (r + 1) % barrier_every == 0:
-                words = _barrier(words)
-                for p in pinned:
-                    p.unpersist()
-                pinned.clear()
-            else:
-                words = words.persist()
-                pinned.append(words)
+            .orderBy(F.desc("score"), F.asc("a"), F.asc("b"))
+            .limit(1)
+            .collect()
+        )
+        if len(pinned) > 1:
+            pinned.pop(0).unpersist()
+        if not best:
+            break
+        a, b, score = best[0]["a"], best[0]["b"], float(best[0]["score"])
+        merges.append((a, b, score))
+        words = words.withColumn("s", _merge_fold(F.col("s"), a, b))
+        if (r + 1) % barrier_every == 0:
+            words = _barrier(words)
+            for p in pinned:
+                p.unpersist()
+            pinned.clear()
+        else:
+            words = words.persist()
+            pinned.append(words)
     for p in pinned:
         if p is not words:
             p.unpersist()
-    return merges, words
+    return merges, home(words)
 
 
 def wordpiece_merges_sql_duck(

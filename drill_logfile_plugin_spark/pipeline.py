@@ -275,7 +275,24 @@ def ingest_increment(
             )
         pair_edges = pairs.select("doc_a", "doc_b")
         if standing_clusters is not None:
-            merged = incremental_dup_clusters(standing_clusters, pair_edges)
+            # A changed document is a NEW node judged on its new text
+            # (the pairs above re-rank it on that text), but the map's
+            # rows that name its id describe the OLD text. Folding them
+            # in would hand the new version its old cluster, dropping it
+            # whatever it now says, so they are left out of the fold.
+            # Verdicts cannot miss them: every new member of a
+            # component holding a standing node loses, and a new node
+            # reaches a standing node only through its own pairs, never
+            # through standing-to-standing links.
+            new_nodes = kept.select(F.col(id_col).alias("node"))
+            current = standing_clusters.join(
+                new_nodes, "node", "left_anti"
+            ).join(
+                new_nodes.withColumnRenamed("node", "cluster_id"),
+                "cluster_id",
+                "left_anti",
+            )
+            merged = incremental_dup_clusters(current, pair_edges)
         else:
             merged = dup_clusters(pair_edges)
         # Survivor policy for an increment: a standing member always

@@ -971,11 +971,9 @@ def q50(spark, sf):
     # runs under this try: if an arm construction raises, the trainer
     # future must be cancelled (not started yet) or awaited (running) —
     # otherwise it keeps submitting minutes of ladder jobs in the
-    # background while holding the session-wide AQE/shuffle-width guard,
-    # corrupting confs and measurements for whatever runs next (r11
+    # background, corrupting measurements for whatever runs next (r11
     # advice). `shutdown(wait=True, cancel_futures=True)` does exactly
-    # that pair, and the guard's own finally restores the confs once the
-    # trainer unwinds.
+    # that pair.
     try:
         return _q50_arms(spark, d, _trained)
     except BaseException:
@@ -1717,28 +1715,12 @@ def q63(spark, sf):
     # must semi-scan the corpus — runs ONCE, not once per arm. The row
     # count rides the barrier job as an observed metric; it drives the
     # leakage arm's broadcast decision below.
-    #
-    # Same small-corpus gate as lsh_candidate_pairs' internal barrier
-    # (r12, guide §2): when scan metadata bounds the corpus at one split
-    # per core, the re-rank materialization here needs no AQE re-planning
-    # either — its joins are probed-count-gated broadcasts, its widths
-    # hand-sized — so the barrier collapses from one driver round-trip
-    # per AQE stage to the broadcast builds plus ONE job. A multi-split
-    # corpus keeps ambient AQE (the guard never engages).
-    from contextlib import nullcontext
-
-    _docs = _t(spark, sf, "documents")
-    _par = spark.sparkContext.defaultParallelism
-    _gate = 0 < D._est_scan_splits(_docs) <= _par
-    with (
-        D._iteration_latency_mode(spark, shuffle_partitions=_par)
-        if _gate
-        else nullcontext()
-    ):
-        pairs, n_pairs = D._probed_barrier(
-            D.lsh_candidate_pairs(_docs, jaccard_threshold=0.6),
-            F.count(F.lit(1)).alias("n"),
-        )
+    pairs, n_pairs = D._probed_barrier(
+        D.lsh_candidate_pairs(
+            _t(spark, sf, "documents"), jaccard_threshold=0.6
+        ),
+        F.count(F.lit(1)).alias("n"),
+    )
     # Both iterative arms run their barrier jobs at CONSTRUCTION time
     # (FastSV contraction rounds, 3 pagerank iterations) — sequentially
     # they serialize ~15 small jobs of pure scheduler latency. Spark job
@@ -1749,16 +1731,8 @@ def q63(spark, sf):
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(2) as _ex:
-        # n_pairs (observed on the barrier job above, inflate-only) lets
-        # each arm run its ENTRY barrier under the AQE-off guard too —
-        # their subtrees are distincts over the materialized pairs frame.
-        _fc = _ex.submit(D.dup_clusters, pairs, edges_hint=n_pairs)
-        _fr = _ex.submit(
-            pagerank,
-            pairs.select("doc_a", "doc_b"),
-            3,
-            edges_hint=n_pairs,
-        )
+        _fc = _ex.submit(D.dup_clusters, pairs)
+        _fr = _ex.submit(pagerank, pairs.select("doc_a", "doc_b"), 3)
         clmap = _fc.result()
         _ranks_raw = _fr.result()
     clusters = (

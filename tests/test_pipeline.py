@@ -353,6 +353,34 @@ def test_ingest_increment_near_dup_standing_bands_and_clusters(
         )
 
 
+def test_ingest_increment_near_dup_changed_member_judged_on_new_text(spark):
+    """A changed document whose id sits in a standing cluster is judged
+    on its NEW text, not on the map row of its old text: either member
+    of the standing cluster {1, 2} changed to unrelated text survives;
+    doc 2 changed to a near-duplicate of doc 1 is dropped."""
+    schema = "doc_id long, source string, text string"
+    existing = spark.createDataFrame(
+        [(1, "web", _good("a")), (2, "web", _variant("a"))], schema
+    )
+    standing_clusters = spark.createDataFrame(
+        [(1, 1), (1, 2)], "cluster_id long, node long"
+    )
+
+    def survivors(doc_id, text):
+        out = ingest_increment(
+            existing,
+            spark.createDataFrame([(doc_id, "web", text)], schema),
+            chunk_tokens=CHUNK,
+            near_dup=True,
+            standing_clusters=standing_clusters,
+        )
+        return {r["doc_id"] for r in out.collect()}
+
+    assert survivors(2, _good("z")) == {2}
+    assert survivors(1, _good("z")) == {1}
+    assert survivors(2, _variant("a", swap_at=5)) == set()
+
+
 def test_ingest_increment_near_dup_bootstrap_and_guards(spark, near_corpus):
     """Bootstrap near-dup (no standing corpus): within-increment
     variants still dedup, standing variants have nothing to match.
