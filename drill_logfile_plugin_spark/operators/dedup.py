@@ -1426,14 +1426,18 @@ BROADCAST_FRONTIER_ROWS = 1_000_000
 def _maybe_broadcast(df: DataFrame, rows: int) -> DataFrame:
     """Size-triggered broadcast hint for known-small iteration frames.
 
-    Checkpointed frames report no size statistics, so AQE never converts
-    an iteration's joins to broadcast on its own — every round would
-    sort-merge even once contraction has shrunk the frontier to a
-    handful of labels. The operators' convergence probes already COUNT
-    these frames for free (observed metrics riding the barrier jobs), so
-    the hint costs nothing: under :data:`BROADCAST_FRONTIER_ROWS` the
-    frame ships to executors and its joins run shuffle-free; larger
-    frames keep the SMJ path.
+    A checkpointed frame keeps its source plan's size ESTIMATE (pyspark
+    4.1.2), not its real size: when that estimate falls under
+    ``autoBroadcastJoinThreshold`` the planner broadcasts the frame
+    without any hint (tests/test_r12_advice.py::
+    test_ladder_lazy_barrier_freeze_jobs), and when it overshoots — a
+    join or aggregate estimate far above the rows contraction actually
+    left — every round sort-merges even over a handful of labels. The
+    operators' convergence probes already COUNT these frames for free
+    (observed metrics riding the barrier jobs), so the hint costs
+    nothing and decides on the real count: under
+    :data:`BROADCAST_FRONTIER_ROWS` the frame ships to executors and its
+    joins run shuffle-free; larger frames keep the planner's choice.
     """
     return F.broadcast(df) if rows <= BROADCAST_FRONTIER_ROWS else df
 

@@ -27,9 +27,14 @@ chunk/pack), glued so that **document text never rides a shuffle**:
 Scale posture at 100 TB: the expensive paths are the two fingerprint
 shuffles (O(increment) + O(corpus) fixed-width rows) and the packing
 window (O(chunks of the *kept delta*), partitioned by shard — never a
-global sort). Persisting the standing corpus's fingerprint projection
-bucketed by id (sources/sinks.write_bucketed) turns tomorrow's diff into
-a zero-shuffle co-located join.
+global sort). The fingerprint diff runs ONCE per increment: in near-dup
+mode, where the LSH probe, the cluster fold, the verdict and the write
+all consume the kept delta, one eager job checkpoints the delta-sized
+winner-id column (never text) and every consumer reads that; the
+exact-only path has one consumer and stays lazy. Persisting the standing
+corpus's fingerprint projection bucketed by id
+(sources/sinks.write_bucketed) turns tomorrow's diff into a zero-shuffle
+co-located join.
 
 No reference counterpart (the reference is a scan plugin); this is the
 LLM-pipeline extension tier's composition surface (SURVEY.md §2 Tier C).
@@ -42,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .operators.chunking import chunk_docs, pack_sequences
 from .operators.dedup import (
+    _barrier,
     dup_clusters,
     incremental_dup_clusters,
     incremental_lsh_pairs,
@@ -183,6 +189,14 @@ def ingest_increment(
     ``standing_docs``, a ``(id, text)`` frame of the standing corpus
     (only candidate-hit rows of it are ever read past the scan).
     Neither present raises (run exact-only instead).
+
+    Eagerness: exact-only mode builds with no Spark job — the whole
+    increment runs in the caller's action. Near-dup mode runs one eager
+    job at build time that checkpoints the winner-id set of stage 2
+    (:func:`..operators.dedup._barrier`, either checkpoint mode), so the
+    snapshot diff and the anti-join against the standing fingerprints
+    run once per increment instead of once per stage-2c consumer; the
+    LSH probe and cluster ladder add their own barriers on top.
     """
     if existing is not None and existing_fp is not None:
         raise ValueError(
@@ -244,6 +258,10 @@ def ingest_increment(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
+    if near_dup:
+        # every stage-2c consumer of ``kept`` would otherwise re-run the
+        # diff and the O(corpus) anti-join; checkpoint the id column only
+        winners = _barrier(winners)
 
     # 3. the one wide join: text meets its keep-verdict
     kept = increment.join(winners, id_col, "left_semi")

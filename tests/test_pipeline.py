@@ -433,6 +433,85 @@ def test_ingest_increment_near_dup_plan_never_shuffles_text(
     )
 
 
+def test_ingest_increment_near_dup_reads_fingerprint_store_once(
+    spark, near_corpus, tmp_path
+):
+    """Near-dup mode materializes the winner-id set once, so the packed
+    output's plan reads that checkpoint and never the standing
+    fingerprint store; the exact-only path stays lazy and submits no job
+    while it builds, so its plan still scans the store."""
+    from drill_logfile_plugin_spark.pipeline import corpus_fingerprints
+
+    existing, increment = near_corpus
+    fp_path = str(tmp_path / "fp")
+    corpus_fingerprints(existing).write.parquet(fp_path)
+    store = spark.read.parquet(fp_path)
+
+    def executed_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    out = ingest_increment(
+        None,
+        increment,
+        chunk_tokens=CHUNK,
+        existing_fp=store,
+        standing_docs=existing,
+        near_dup=True,
+    )
+    assert {r["doc_id"] for r in out.collect()} == {21, 23}
+    assert "FileScan" not in executed_plan(out)
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def _njobs():
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) + 1 if ids else 0
+
+    j0 = _njobs()
+    exact_only = ingest_increment(
+        None, increment, chunk_tokens=CHUNK, existing_fp=store
+    )
+    assert _njobs() == j0, "exact-only build submitted a Spark job"
+    exact_only.collect()
+    assert "FileScan" in executed_plan(exact_only)
+
+
+def test_ingest_increment_near_dup_reliable_checkpoint_mode_identical(
+    spark, near_corpus, tmp_path
+):
+    """The winner-id barrier takes both checkpoint modes: with a
+    checkpoint dir configured (reliable checkpoint()) and with the
+    executor-local escape hatch, the packed output is identical."""
+    from drill_logfile_plugin_spark.operators import dedup as D
+
+    existing, increment = near_corpus
+
+    def packed():
+        return ingest_increment(
+            existing, increment, chunk_tokens=CHUNK, near_dup=True
+        ).collect()
+
+    sc = spark.sparkContext
+    had_dir = sc.getCheckpointDir() is not None
+    prev = spark.conf.get(D.RELIABLE_CHECKPOINT_CONF, None)
+    if not had_dir:
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        spark.conf.set(D.RELIABLE_CHECKPOINT_CONF, "true")
+        reliable = packed()
+        spark.conf.set(D.RELIABLE_CHECKPOINT_CONF, "false")
+        local = packed()
+    finally:
+        # a checkpoint dir cannot be unset: without one before, keep the
+        # session on executor-local barriers as it was
+        if had_dir and prev is None:
+            spark.conf.unset(D.RELIABLE_CHECKPOINT_CONF)
+        else:
+            spark.conf.set(D.RELIABLE_CHECKPOINT_CONF, prev or "false")
+    assert sorted(map(str, reliable)) == sorted(map(str, local))
+    assert {r["doc_id"] for r in local} == {21, 23}
+
+
 def test_ingest_increment_stream_near_dup_across_epochs(spark, tmp_path):
     """The near-dup streaming loop: a crawl VARIANT (not byte-identical)
     of content packed in an earlier epoch is dropped by the standing
