@@ -14,8 +14,8 @@ Rules:
 
 * zip via stdlib ``zipfile``; tar via ``tarfile`` over an in-memory
   stream, with the tar bytes first run through the package's bounded
-  ``decompress_payload`` sniffing when they carry a gzip/bz2/xz
-  envelope (``.tar.gz`` handled without a separate pass);
+  ``multimodal.unwrap_envelope`` when they carry a gzip/bz2/xz/zstd/
+  lz4/snappy envelope (``.tar.gz`` handled without a separate pass);
 * directories, links, and zero-byte members are skipped (nothing to
   route); member NAMES pass through untouched — path traversal is a
   non-issue because nothing here touches a filesystem (bytes to bytes);
@@ -48,15 +48,6 @@ import zlib
 _MAX_MEMBERS = 1 << 20
 _MAX_TOTAL = 1 << 31  # 2 GiB declared-uncompressed bound per archive
 _MAX_MEMBER = 512 << 20
-
-#: magic prefixes for the compressed-tar envelopes decompress_payload opens
-_TAR_ENVELOPES = (
-    b"\x1f\x8b", b"BZh", b"\xfd7zXZ\x00", b"\x28\xb5\x2f\xfd",
-    b"\x04\x22\x4d\x18",  # lz4 frame (.tar.lz4)
-    b"\x02\x21\x4c\x18",  # lz4 legacy frame
-    b"\xff\x06\x00\x00sNaPpY",  # snappy framing (.tar.sz)
-)
-
 
 #: WinZip AES (compression method 99) strength byte -> AES key bytes;
 #: salt is half the key length per the published AE-1/AE-2 spec.
@@ -212,34 +203,16 @@ def _zip_members(payload: bytes, password: str | None = None):
 
 
 def _tar_members(payload: bytes):
-    if any(payload[: len(m)] == m for m in _TAR_ENVELOPES):
-        # streaming bounded inflate (decompressobj/max_length) capped AT
-        # _MAX_TOTAL — the one-shot gzip/bz2/lzma.decompress functions
-        # inflate fully BEFORE any size check, so a small bz2/xz bomb
-        # (>10^4:1 ratios) would exhaust executor memory ahead of the
-        # guard; the shared bounded primitive closes that window.
-        # .tar.zst routes through the import-guarded bounded zstd lane
-        # (NotImplementedError names the missing module actionably).
-        from .multimodal import _make_zstd_one, bounded_decompress_bytes
+    from .multimodal import sniff_envelope, unwrap_envelope
 
+    if sniff_envelope(payload):
+        # streaming bounded inflate capped AT _MAX_TOTAL — the one-shot
+        # gzip/bz2/lzma.decompress functions inflate fully BEFORE any
+        # size check, so a small bz2/xz bomb (>10^4:1 ratios) would
+        # exhaust executor memory ahead of the guard; the shared
+        # bounded primitive closes that window for every envelope.
         try:
-            if payload[:4] == b"\x28\xb5\x2f\xfd":
-                payload = _make_zstd_one(_MAX_TOTAL)(payload)
-            elif payload[:4] in (b"\x04\x22\x4d\x18", b"\x02\x21\x4c\x18"):
-                from .lz4 import lz4_frame_decompress
-
-                payload = lz4_frame_decompress(payload, _MAX_TOTAL)
-            elif payload[:10] == b"\xff\x06\x00\x00sNaPpY":
-                from .snappy import snappy_framed_decompress
-
-                payload = snappy_framed_decompress(payload, _MAX_TOTAL)
-            else:
-                codec = (
-                    "gzip"
-                    if payload[:2] == b"\x1f\x8b"
-                    else ("bz2" if payload[:3] == b"BZh" else "xz")
-                )
-                payload = bounded_decompress_bytes(payload, codec, _MAX_TOTAL)
+            payload = unwrap_envelope(payload, _MAX_TOTAL)
         except ValueError as exc:
             raise ValueError(f"compressed tar envelope corrupt: {exc}")
     try:
@@ -290,10 +263,9 @@ def archive_members(payload: bytes, password: str | None = None):
                 raise ValueError("archive declared size exceeds the bound")
             yield name, data
         return
-    if (
-        any(payload[: len(m)] == m for m in _TAR_ENVELOPES)
-        or payload[257:262] == b"ustar"
-    ):
+    from .multimodal import sniff_envelope
+
+    if sniff_envelope(payload) or payload[257:262] == b"ustar":
         yield from _tar_members(payload)
         return
     raise ValueError("payload is neither a zip nor a (compressed) tar nor a 7z")

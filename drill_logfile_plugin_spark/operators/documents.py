@@ -66,48 +66,22 @@ DOCUMENT_FORMATS = (
 )
 
 
-#: compression envelopes the router unwraps transparently (mixed dumps
-#: ship .html.gz / .json.xz wholesale, and .jsonl.zst is the shipping
-#: format of the modern public corpora — The Pile, RedPajama, Dolma;
-#: .lz4 and snappy-framed .sz come out of Kafka/Hadoop-era exports);
-#: tar payloads stay with explode_archive — an envelope whose CONTENT
-#: is a tar is an archive, not a document
-_ENVELOPE_MAGIC = (
-    b"\x1f\x8b", b"BZh", b"\xfd7zXZ\x00", b"\x28\xb5\x2f\xfd",
-    b"\x04\x22\x4d\x18",  # lz4 frame
-    b"\x02\x21\x4c\x18",  # lz4 legacy frame
-    b"\xff\x06\x00\x00sNaPpY",  # snappy framing format
-)
+#: inflation bound of one compression envelope (mixed dumps ship
+#: .html.gz / .json.xz wholesale, .jsonl.zst is the shipping format of
+#: the modern public corpora, .lz4 and snappy-framed .sz come out of
+#: Kafka/Hadoop-era exports; ``multimodal.sniff_envelope`` has the
+#: magic table); tar payloads stay with explode_archive — an envelope
+#: whose CONTENT is a tar is an archive, not a document
 _ENVELOPE_MAX = 256 << 20
 
 
-def _is_envelope(payload: bytes) -> bool:
-    return any(payload[: len(m)] == m for m in _ENVELOPE_MAGIC)
-
-
 def _unwrap_envelope(payload: bytes) -> bytes:
-    """Bounded decompression of a gzip/bz2/xz/zstd/lz4/snappy-framed
-    envelope (the shared streaming helpers — a bomb costs the cap, not
-    an executor; the zstd lane is import-guarded and names its absence
-    actionably; lz4 and snappy are the repo's own spec decoders)."""
-    from .multimodal import _make_zstd_one, bounded_decompress_bytes
+    """Bounded decompression of a compression envelope through the
+    shared ``multimodal.unwrap_envelope`` (a bomb costs the cap, not an
+    executor; corruption is ValueError)."""
+    from .multimodal import unwrap_envelope
 
-    if payload[:4] == b"\x28\xb5\x2f\xfd":
-        return _make_zstd_one(_ENVELOPE_MAX)(payload)
-    if payload[:4] in (b"\x04\x22\x4d\x18", b"\x02\x21\x4c\x18"):
-        from .lz4 import lz4_frame_decompress
-
-        return lz4_frame_decompress(payload, _ENVELOPE_MAX)
-    if payload[:10] == b"\xff\x06\x00\x00sNaPpY":
-        from .snappy import snappy_framed_decompress
-
-        return snappy_framed_decompress(payload, _ENVELOPE_MAX)
-    codec = (
-        "gzip"
-        if payload[:2] == b"\x1f\x8b"
-        else ("bz2" if payload[:3] == b"BZh" else "xz")
-    )
-    return bounded_decompress_bytes(payload, codec, _ENVELOPE_MAX)
+    return unwrap_envelope(payload, _ENVELOPE_MAX)
 
 
 _MAX_ENVELOPE_DEPTH = 3
@@ -120,7 +94,9 @@ def sniff_document(payload: bytes, _depth: int = 0) -> str:
     which unwraps once. Nesting is bounded: a deeper-than-3 envelope
     chain is a crafted payload, not a document (and unbounded recursion
     would escape the quarantine contract as RecursionError)."""
-    if _is_envelope(payload):
+    from .multimodal import sniff_envelope
+
+    if sniff_envelope(payload):
         if _depth >= _MAX_ENVELOPE_DEPTH:
             raise ValueError(
                 "compression envelopes nested deeper than the bound"

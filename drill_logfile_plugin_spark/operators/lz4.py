@@ -1,107 +1,36 @@
-"""LZ4 frame + block decoding from the published format specs.
+"""LZ4 frame and block decoding.
 
 LZ4 is the shipping compression of Kafka topic dumps, Hadoop
 intermediate data, and a long tail of data-lake exports
-(``.jsonl.lz4`` / ``.tar.lz4``), and the stdlib has no codec for it —
-so without this module those envelopes would be a named absence. The
-formats are small and fully published (lz4_Block_format.md /
-lz4_Frame_format.md in the reference lz4 repository), which puts them
-inside the repo's from-scratch discipline: everything here is written
-against the spec text and pinned against an independent in-test
-ENCODER plus known-answer vectors (xxHash32's published check values).
+(``.jsonl.lz4`` / ``.tar.lz4``).
 
-Scope, stated plainly:
-
-* **Block format**: token-per-sequence (literal-length nibble with
-  255-continuation extension, 2-byte little-endian match offset,
-  match-length nibble + 4 with the same extension), overlap-capable
-  match copies. The decoder is liberal where the spec constrains only
-  ENCODERS (end-of-block parsing rules) but strict on structure:
-  offset 0, offsets beyond the window, truncated literals/offsets,
-  and output beyond the caller's bound are all ValueError.
-* **Frame format**: magic ``0x184D2204``, FLG/BD descriptor with the
-  header-checksum byte VERIFIED (xxHash32, the spec's ``(xxh32(hdr)
-  >> 8) & 0xFF``), content size / block checksums / content checksum
-  honored and verified when present, block-independence flag driving
-  a 64 KiB linked-block history window, skippable frames
-  (``0x184D2A5X``) skipped, concatenated frames decoded in sequence
-  (the gzip-multistream convention). Frames declaring a DictID
-  require an external dictionary this environment cannot supply —
-  NotImplementedError naming the gap, never silent garbage.
-* **Legacy frame** (``0x184C2102``, the original ``lz4`` CLI): fixed
-  8 MiB blocks, no checksums, ends at EOF or at the next magic.
+* **Standard frames** (magic ``0x184D2204``) decode through pyarrow's
+  liblz4 stream (``multimodal.bounded_decompress_bytes``): header,
+  block and content checksums verified, skippable frames skipped,
+  concatenated frames decoded in sequence. liblz4 names its errors
+  (``ERROR_headerChecksum_invalid`` and so on).
+* **Raw blocks** (lz4_Block_format.md) decode by hand, because pyarrow
+  has no API for them: its stream rejects the legacy frame
+  (``ERROR_frameType_unknown``), and its one-shot ``lz4_raw`` codec pads
+  its output to the size it is given rather than trimming it, so a
+  block of unknown decoded length cannot go through it. The block
+  decoder feeds the **legacy frame** (``0x184C2102``, the original
+  ``lz4`` CLI: fixed 8 MiB blocks, no checksums, ends at EOF or at
+  the next magic) and the **Hadoop block layout**. A legacy frame
+  decodes by hand only ahead of any standard frame: once a standard
+  or skippable frame starts, the rest of the payload goes to liblz4.
 
 Like every untrusted-input lane: all declared sizes are bounded
 before allocation, inflation stops AT the caller's cap (a bomb costs
 the cap, not an executor), corrupt structure is ValueError so the
 per-row quarantine contract applies.
 
-Wired into ``operators/documents._unwrap_envelope`` (``.html.lz4`` /
-``.jsonl.lz4`` documents) and ``operators/archives._tar_members``
-(``.tar.lz4``) beside the gzip/bz2/xz/zstd envelopes.
+Wired into ``multimodal.unwrap_envelope`` (``.html.lz4`` /
+``.jsonl.lz4`` documents, ``.tar.lz4`` archives) and the SequenceFile
+``Lz4Codec``.
 """
 
 from __future__ import annotations
-
-_PRIME32_1 = 2654435761
-_PRIME32_2 = 2246822519
-_PRIME32_3 = 3266489917
-_PRIME32_4 = 668265263
-_PRIME32_5 = 374761393
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    """xxHash32 (Yann Collet's published algorithm) — the frame
-    format's checksum primitive. Pinned against the reference check
-    values in tests."""
-    n = len(data)
-    i = 0
-    if n >= 16:
-        v1 = (seed + _PRIME32_1 + _PRIME32_2) & _M32
-        v2 = (seed + _PRIME32_2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _PRIME32_1) & _M32
-        limit = n - 16
-        while i <= limit:
-            for j, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[i + 4 * j : i + 4 * j + 4], "little")
-                v = (v + lane * _PRIME32_2) & _M32
-                v = (_rotl32(v, 13) * _PRIME32_1) & _M32
-                if j == 0:
-                    v1 = v
-                elif j == 1:
-                    v2 = v
-                elif j == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 16
-        h = (
-            _rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12) + _rotl32(v4, 18)
-        ) & _M32
-    else:
-        h = (seed + _PRIME32_5) & _M32
-    h = (h + n) & _M32
-    while i + 4 <= n:
-        lane = int.from_bytes(data[i : i + 4], "little")
-        h = (h + lane * _PRIME32_3) & _M32
-        h = (_rotl32(h, 17) * _PRIME32_4) & _M32
-        i += 4
-    while i < n:
-        h = (h + data[i] * _PRIME32_5) & _M32
-        h = (_rotl32(h, 11) * _PRIME32_1) & _M32
-        i += 1
-    h ^= h >> 15
-    h = (h * _PRIME32_2) & _M32
-    h ^= h >> 13
-    h = (h * _PRIME32_3) & _M32
-    h ^= h >> 16
-    return h
 
 
 def _read_lsic(src: bytes, i: int, base: int) -> tuple[int, int]:
@@ -119,15 +48,10 @@ def _read_lsic(src: bytes, i: int, base: int) -> tuple[int, int]:
             return total, i
 
 
-def lz4_block_decompress(
-    src: bytes, max_out: int, history: bytes = b""
-) -> bytes:
-    """Decode one LZ4 BLOCK (lz4_Block_format.md). ``history`` is the
-    already-decoded window a linked-block frame provides (matches may
-    reach back into it); the return value is this block's output only.
-    ValueError on malformed structure or output beyond ``max_out``."""
-    out = bytearray(history)
-    base = len(history)
+def lz4_block_decompress(src: bytes, max_out: int) -> bytes:
+    """Decode one LZ4 BLOCK (lz4_Block_format.md). ValueError on
+    malformed structure or output beyond ``max_out``."""
+    out = bytearray()
     i = 0
     n = len(src)
     while i < n:
@@ -140,7 +64,7 @@ def lz4_block_decompress(
             raise ValueError("lz4 block truncated in literals")
         out += src[i : i + lit]
         i += lit
-        if len(out) - base > max_out:
+        if len(out) > max_out:
             raise ValueError("lz4 block output exceeds the bound")
         if i == n:
             break  # final sequence: literals only
@@ -156,7 +80,7 @@ def lz4_block_decompress(
         if mlen == 15:
             mlen, i = _read_lsic(src, i, 15)
         mlen += 4
-        if len(out) - base + mlen > max_out:
+        if len(out) + mlen > max_out:
             raise ValueError("lz4 block output exceeds the bound")
         start = len(out) - offset
         if offset >= mlen:
@@ -166,109 +90,11 @@ def lz4_block_decompress(
             pattern = bytes(out[start:])
             reps = mlen // offset + 1
             out += (pattern * reps)[:mlen]
-    return bytes(out[base:])
+    return bytes(out)
 
 
-_LZ4_FRAME_MAGIC = b"\x04\x22\x4d\x18"  # 0x184D2204 little-endian
-_LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"  # 0x184C2102
-_LZ4_MAGICS = (_LZ4_FRAME_MAGIC, _LZ4_LEGACY_MAGIC)
+_LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"  # 0x184C2102 little-endian
 _LEGACY_BLOCK_MAX = 8 << 20  # the legacy frame's fixed block size
-
-
-def _block_max_size(bd: int) -> int:
-    code = (bd >> 4) & 0x7
-    if code < 4 or code > 7:
-        raise ValueError(f"lz4 frame BD block-max code {code} is reserved")
-    if bd & 0x8F:
-        raise ValueError("lz4 frame BD reserved bits set")
-    return 1 << (8 + 2 * code)  # 4->64KiB 5->256KiB 6->1MiB 7->4MiB
-
-
-def _decode_standard_frame(
-    payload: bytes, pos: int, out: bytearray, max_bytes: int
-) -> int:
-    """One standard frame starting AFTER its magic; returns the
-    position after the frame."""
-    if pos + 3 > len(payload):
-        raise ValueError("lz4 frame truncated in the descriptor")
-    flg = payload[pos]
-    if (flg >> 6) != 0b01:
-        raise ValueError(f"lz4 frame version {(flg >> 6)} unsupported")
-    if flg & 0b10:
-        raise ValueError("lz4 frame FLG reserved bit set")
-    b_indep = bool(flg & 0x20)
-    b_checksum = bool(flg & 0x10)
-    has_csize = bool(flg & 0x08)
-    c_checksum = bool(flg & 0x04)
-    has_dict = bool(flg & 0x01)
-    bd = payload[pos + 1]
-    block_max = _block_max_size(bd)
-    hdr_start = pos
-    pos += 2
-    content_size = None
-    if has_csize:
-        if pos + 8 > len(payload):
-            raise ValueError("lz4 frame truncated in the content size")
-        content_size = int.from_bytes(payload[pos : pos + 8], "little")
-        if content_size > max_bytes:
-            raise ValueError("lz4 declared content size exceeds the bound")
-        pos += 8
-    if has_dict:
-        # the DictID names a dictionary the decoder must already hold
-        raise NotImplementedError(
-            "lz4 frame requires an external dictionary (DictID set); "
-            "dictionary-compressed frames are out of this lane's scope"
-        )
-    if pos >= len(payload):
-        raise ValueError("lz4 frame truncated before the header checksum")
-    hc = payload[pos]
-    if ((xxh32(payload[hdr_start:pos]) >> 8) & 0xFF) != hc:
-        raise ValueError("lz4 frame header checksum mismatch")
-    pos += 1
-
-    frame_start = len(out)
-    while True:
-        if pos + 4 > len(payload):
-            raise ValueError("lz4 frame truncated at a block size")
-        bword = int.from_bytes(payload[pos : pos + 4], "little")
-        pos += 4
-        if bword == 0:
-            break  # EndMark
-        uncompressed = bool(bword & 0x80000000)
-        bsize = bword & 0x7FFFFFFF
-        if bsize > block_max:
-            raise ValueError("lz4 block size exceeds the frame's block max")
-        if pos + bsize > len(payload):
-            raise ValueError("lz4 frame truncated in a block")
-        data = payload[pos : pos + bsize]
-        pos += bsize
-        if b_checksum:
-            if pos + 4 > len(payload):
-                raise ValueError("lz4 frame truncated at a block checksum")
-            want = int.from_bytes(payload[pos : pos + 4], "little")
-            if xxh32(data) != want:
-                raise ValueError("lz4 block checksum mismatch")
-            pos += 4
-        if uncompressed:
-            chunk = data
-        else:
-            history = b"" if b_indep else bytes(out[-65536:])
-            chunk = lz4_block_decompress(data, block_max, history)
-        if len(out) + len(chunk) > max_bytes:
-            raise ValueError("lz4 output exceeds the bound")
-        out += chunk
-    if c_checksum:
-        if pos + 4 > len(payload):
-            raise ValueError("lz4 frame truncated at the content checksum")
-        want = int.from_bytes(payload[pos : pos + 4], "little")
-        if xxh32(bytes(out[frame_start:])) != want:
-            raise ValueError("lz4 content checksum mismatch")
-        pos += 4
-    if content_size is not None and len(out) - frame_start != content_size:
-        raise ValueError(
-            "lz4 decoded size differs from the declared content size"
-        )
-    return pos
 
 
 def _decode_legacy_frame(
@@ -336,30 +162,18 @@ def hadoop_lz4_decompress(payload: bytes, max_bytes: int) -> bytes:
 
 
 def lz4_frame_decompress(payload: bytes, max_bytes: int) -> bytes:
-    """Decode a whole ``.lz4`` payload: standard frames (checksums
-    verified), legacy frames, and skippable frames, concatenated."""
+    """Decode a whole ``.lz4`` payload: leading legacy frames by hand,
+    then standard and skippable frames, concatenated, through liblz4."""
+    from .multimodal import bounded_decompress_bytes
+
+    if len(payload) < 4:
+        raise ValueError("lz4 payload shorter than a frame magic")
     out = bytearray()
     pos = 0
-    n = len(payload)
-    if n < 4:
-        raise ValueError("lz4 payload shorter than a frame magic")
-    while pos < n:
-        if pos + 4 > n:
-            raise ValueError("lz4 trailing bytes after the last frame")
-        magic = int.from_bytes(payload[pos : pos + 4], "little")
-        pos += 4
-        if magic == 0x184D2204:
-            pos = _decode_standard_frame(payload, pos, out, max_bytes)
-        elif magic == 0x184C2102:
-            pos = _decode_legacy_frame(payload, pos, out, max_bytes)
-        elif 0x184D2A50 <= magic <= 0x184D2A5F:
-            if pos + 4 > n:
-                raise ValueError("lz4 skippable frame truncated")
-            skip = int.from_bytes(payload[pos : pos + 4], "little")
-            pos += 4
-            if pos + skip > n:
-                raise ValueError("lz4 skippable frame size exceeds payload")
-            pos += skip
-        else:
-            raise ValueError(f"lz4 frame magic {magic:#010x} unrecognized")
+    while payload[pos : pos + 4] == _LZ4_LEGACY_MAGIC:
+        pos = _decode_legacy_frame(payload, pos + 4, out, max_bytes)
+    if pos < len(payload):
+        out += bounded_decompress_bytes(
+            payload[pos:], "lz4", max_bytes - len(out)
+        )
     return bytes(out)

@@ -1600,112 +1600,6 @@ def phash_neardup(
     )
 
 
-def _zstd_module():
-    """Guarded zstd import: Python >= 3.14 stdlib first, then the PyPI
-    ``zstandard`` binding. Returns (module, flavor) or (None, None)."""
-    try:
-        from compression import zstd as mod  # Python >= 3.14
-
-        return mod, "stdlib"
-    except ImportError:
-        pass
-    try:
-        import zstandard as mod
-
-        return mod, "zstandard"
-    except ImportError:
-        return None, None
-
-
-def _make_zstd_one(max_bytes: int):
-    """Bounded single-payload zstd decompressor under the bomb-guard
-    contract (inflation stops AT the cap; corrupt streams map to
-    ValueError so the quarantine lanes treat them like every other
-    codec's failures)."""
-    mod, flavor = _zstd_module()
-    if mod is None:
-        # r11: the pure-Python RFC 8878 decoder keeps zstd a LIVE
-        # format on module-less hosts (correctness/portability lane;
-        # a native module is always preferred when present — this
-        # branch only runs when neither stdlib nor binding exists)
-        from .zstd_dec import zstd_decompress
-
-        def _one(p: bytes) -> bytes:
-            return zstd_decompress(p, max_bytes)
-
-        return _one
-    zstd_error = getattr(mod, "ZstdError", Exception)
-
-    if flavor == "zstandard":
-
-        def _one(p: bytes) -> bytes:
-            try:
-                # max_output_size caps the allocation; the binding raises
-                # when the frame would exceed it (bomb => bounded work)
-                out = mod.ZstdDecompressor().decompress(
-                    p, max_output_size=max_bytes + 1
-                )
-            except zstd_error as ex:
-                raise ValueError(f"bad zstd stream: {ex}") from ex
-            if len(out) > max_bytes:
-                raise ValueError(
-                    f"decompressed size exceeds max_bytes={max_bytes}"
-                )
-            return out
-
-        return _one
-
-    def _one(p: bytes) -> bytes:
-        # stdlib flavor: incremental decompressor with max_length (the
-        # bz2/lzma decompressobj protocol)
-        dec = mod.ZstdDecompressor()
-        out = bytearray()
-        data = p
-        try:
-            while not dec.eof:
-                chunk = dec.decompress(data, max_bytes + 1 - len(out))
-                out += chunk
-                if len(out) > max_bytes:
-                    raise ValueError(
-                        f"decompressed size exceeds max_bytes={max_bytes}"
-                    )
-                data = b""
-                if not chunk and dec.needs_input:
-                    raise ValueError("bad zstd stream: truncated")
-        except zstd_error as ex:
-            raise ValueError(f"bad zstd stream: {ex}") from ex
-        return bytes(out)
-
-    return _one
-
-
-def _bounded_gzip_bytes(p: bytes, max_bytes: int) -> bytes:
-    """Streaming bounded gzip inflate (multi-member — the WARC layout):
-    each decompressobj call is capped by ``max_length``, so a bomb costs
-    ``max_bytes`` of work, never its full inflated size."""
-    import zlib as _zlib
-
-    out, pos = [], 0
-    total = 0
-    while pos < len(p):
-        d = _zlib.decompressobj(16 + _zlib.MAX_WBITS)
-        try:
-            chunk = d.decompress(p[pos:], max_bytes - total + 1)
-        except _zlib.error as ex:
-            raise ValueError(f"bad gzip stream: {ex}") from ex
-        total += len(chunk)
-        if total > max_bytes:
-            raise ValueError(f"decompressed size exceeds max_bytes={max_bytes}")
-        out.append(chunk)
-        if not d.eof:
-            raise ValueError("truncated gzip member")
-        consumed = len(p) - pos - len(d.unused_data)
-        if consumed <= 0:
-            raise ValueError("gzip stream did not advance")
-        pos += consumed
-    return b"".join(out)
-
-
 def _bounded_multistream_bytes(
     p: bytes, new_decompressor, err_types, max_bytes: int, name: str
 ) -> bytes:
@@ -1743,108 +1637,89 @@ def _bounded_multistream_bytes(
     return bytes(out)
 
 
-def bounded_decompress_bytes(p: bytes, codec: str, max_bytes: int) -> bytes:
-    """Driver-free single-payload bounded decompression — the shared
-    primitive behind ``decompress_payload``'s gzip/bz2/xz lanes, also
-    used by ``operators.archives`` to open compressed-tar envelopes
-    without the unbounded one-shot ``*.decompress`` bomb window."""
-    import bz2 as _bz2
-    import lzma as _lzma
+#: largest read from a decompression stream: a bomb costs at most this
+#: much memory past the cap
+_READ_CHUNK = 1 << 20
 
-    if codec == "gzip":
-        return _bounded_gzip_bytes(p, max_bytes)
+#: the compression envelopes the document router and the archive tier
+#: unwrap transparently, by magic prefix
+_ENVELOPES = (
+    (b"\x1f\x8b", "gzip"),
+    (b"BZh", "bz2"),
+    (b"\xfd7zXZ\x00", "xz"),
+    (b"\x28\xb5\x2f\xfd", "zstd"),
+    (b"\x04\x22\x4d\x18", "lz4"),  # lz4 frame
+    (b"\x02\x21\x4c\x18", "lz4"),  # lz4 legacy frame
+    (b"\xff\x06\x00\x00sNaPpY", "snappy"),  # snappy framing format
+)
+
+
+def bounded_decompress_bytes(p: bytes, codec: str, max_bytes: int) -> bytes:
+    """Driver-free single-payload bounded decompression: the one
+    primitive behind ``decompress_payload``, the document and
+    compressed-tar envelopes, the WARC segment codecs and the Avro /
+    SequenceFile zstd codecs.
+
+    gzip (multi-member), zstd and lz4 frames (concatenated and
+    skippable frames included) and brotli read pyarrow's decompression
+    stream in chunks up to ``max_bytes + 1``, so a bomb costs the cap,
+    never its inflated size. bz2 and xz keep the stdlib
+    ``decompressobj`` loop. Corrupt, truncated and over-cap input is
+    ValueError (the quarantine contract); an empty zstd, lz4 or brotli
+    payload is corrupt, an empty gzip, bz2 or xz one inflates to b"".
+    zstd dictionary frames are unsupported and raise ValueError."""
     if codec == "bz2":
+        import bz2 as _bz2
+
         return _bounded_multistream_bytes(
             p, _bz2.BZ2Decompressor, (OSError, EOFError), max_bytes, "bz2"
         )
     if codec == "xz":
+        import lzma as _lzma
+
         return _bounded_multistream_bytes(
             p, _lzma.LZMADecompressor, (_lzma.LZMAError,), max_bytes, "xz"
         )
-    raise NotImplementedError(f"bounded_decompress_bytes: codec {codec!r}")
+    if codec not in ("gzip", "zstd", "lz4", "brotli"):
+        raise NotImplementedError(f"bounded_decompress_bytes: codec {codec!r}")
+    import pyarrow as pa
 
-
-_BROTLI_INPUT_CHUNK = 64 * 1024
-
-
-def _brotli_module():
-    """Guarded import: prefer the Google ``brotli`` binding, fall back
-    to ``brotlicffi`` (API-compatible ``Decompressor``). Returns the
-    module or None — this environment ships neither, so the lane raises
-    an actionable NotImplementedError and its live tests auto-skip
-    (the bounded loop is still executed end-to-end via an API-faithful
-    fake in tests, the zstd-lane precedent)."""
+    if not p and codec != "gzip":
+        raise ValueError(f"bad {codec} stream: empty payload")
+    parts, total = [], 0
     try:
-        import brotli as mod
+        stream = pa.CompressedInputStream(pa.BufferReader(p), codec)
+        while chunk := stream.read(min(_READ_CHUNK, max_bytes + 1 - total)):
+            total += len(chunk)
+            if total > max_bytes:
+                raise ValueError(
+                    f"decompressed size exceeds max_bytes={max_bytes}"
+                )
+            parts.append(chunk)
+    except (OSError, pa.ArrowException) as ex:
+        raise ValueError(f"bad {codec} stream: {ex}") from ex
+    return b"".join(parts)
 
-        return mod
-    except ImportError:
-        pass
-    try:
-        import brotlicffi as mod
 
-        return mod
-    except ImportError:
-        return None
+def sniff_envelope(payload: bytes) -> str | None:
+    """The compression envelope ``payload`` starts with, or None."""
+    return next((c for m, c in _ENVELOPES if payload.startswith(m)), None)
 
 
-def _make_brotli_one(max_bytes: int):
-    """Bounded single-payload brotli decompressor under the bomb-guard
-    contract. The brotli ``Decompressor.process`` API has no stdlib
-    ``max_length`` twin, so boundedness comes from two layers: input is
-    fed in 64 KiB slices with the cap checked after each, and — where
-    the binding supports it (brotli >= 1.1) — ``output_buffer_limit``
-    hard-caps each call's allocation; older bindings fall back to the
-    slice-level check."""
-    mod = _brotli_module()
-    if mod is None:
-        raise NotImplementedError(
-            "codec 'brotli': no brotli module in this environment — "
-            "install the 'brotli' (Google binding) or 'brotlicffi' "
-            "package; Content-Encoding: br WARC payloads route here"
-        )
-    brotli_error = getattr(mod, "error", Exception)
+def unwrap_envelope(payload: bytes, max_bytes: int) -> bytes:
+    """Bounded decompression of a payload ``sniff_envelope`` names.
+    lz4 goes through ``lz4_frame_decompress`` (legacy frames are decoded
+    by hand) and snappy framing through ``snappy_framed_decompress``."""
+    codec = sniff_envelope(payload)
+    if codec == "lz4":
+        from .lz4 import lz4_frame_decompress
 
-    def _one(p: bytes) -> bytes:
-        dec = mod.Decompressor()
-        out = bytearray()
-        use_limit = True
-        try:
-            for pos in range(0, len(p), _BROTLI_INPUT_CHUNK):
-                sl = p[pos : pos + _BROTLI_INPUT_CHUNK]
-                budget = max_bytes + 1 - len(out)
-                if use_limit:
-                    try:
-                        out += dec.process(sl, output_buffer_limit=budget)
-                    except TypeError:
-                        use_limit = False
-                        out += dec.process(sl)
-                else:
-                    out += dec.process(sl)
-                if len(out) > max_bytes:
-                    raise ValueError(
-                        f"decompressed size exceeds max_bytes={max_bytes}"
-                    )
-                # drain buffered output the limit held back (brotli>=1.1
-                # keeps producing on empty input until caught up)
-                while use_limit and not dec.is_finished():
-                    more = dec.process(
-                        b"", output_buffer_limit=max_bytes + 1 - len(out)
-                    )
-                    if not more:
-                        break
-                    out += more
-                    if len(out) > max_bytes:
-                        raise ValueError(
-                            f"decompressed size exceeds max_bytes={max_bytes}"
-                        )
-            if not dec.is_finished():
-                raise ValueError("truncated brotli stream")
-        except brotli_error as ex:
-            raise ValueError(f"bad brotli stream: {ex}") from ex
-        return bytes(out)
+        return lz4_frame_decompress(payload, max_bytes)
+    if codec == "snappy":
+        from .snappy import snappy_framed_decompress
 
-    return _one
+        return snappy_framed_decompress(payload, max_bytes)
+    return bounded_decompress_bytes(payload, codec, max_bytes)
 
 
 def decompress_payload(
@@ -1869,16 +1744,11 @@ def decompress_payload(
 
     ``codec``: ``"gzip"`` (multi-member streams supported — the WARC
     member layout), ``"zlib"``, ``"raw-deflate"``, ``"bz2"``, ``"xz"``,
-    and ``"zstd"`` where a zstd module exists (Python 3.14's stdlib
-    ``compression.zstd`` or the ``zstandard`` PyPI binding — modern
-    corpora increasingly ship zstd; this environment has neither, so the
-    lane raises NotImplementedError naming what to install, and its
-    tests auto-skip), plus ``"brotli"`` where a brotli module exists
-    (``brotli`` or ``brotlicffi`` — ``Content-Encoding: br`` is
-    ubiquitous in WARC payloads; same guarded-import rule as zstd).
+    ``"zstd"`` (modern corpora increasingly ship zstd) and ``"brotli"``
+    (``Content-Encoding: br`` is ubiquitous in WARC payloads). gzip,
+    zstd and brotli decode through pyarrow's bundled libraries; zstd
+    dictionary frames are unsupported and quarantine like corruption.
     """
-    import bz2 as _bz2
-    import lzma as _lzma
     import zlib as _zlib
 
     _check_on_error(on_error)
@@ -1899,28 +1769,18 @@ def decompress_payload(
             raise ValueError("truncated deflate stream")
         return chunk
 
-    if codec == "gzip":
-        _one = lambda p: _bounded_gzip_bytes(p, max_bytes)  # noqa: E731
-    elif codec == "zlib":
+    if codec == "zlib":
         _one = lambda p: _zlib_one(p, _zlib.MAX_WBITS)  # noqa: E731
     elif codec == "raw-deflate":
         _one = lambda p: _zlib_one(p, -_zlib.MAX_WBITS)  # noqa: E731
-    elif codec == "bz2":
-        _one = lambda p: _bounded_multistream_bytes(  # noqa: E731
-            p, _bz2.BZ2Decompressor, (OSError, EOFError), max_bytes, "bz2"
+    elif codec in ("gzip", "bz2", "xz", "zstd", "brotli"):
+        _one = lambda p: bounded_decompress_bytes(  # noqa: E731
+            p, codec, max_bytes
         )
-    elif codec == "xz":
-        _one = lambda p: _bounded_multistream_bytes(  # noqa: E731
-            p, _lzma.LZMADecompressor, (_lzma.LZMAError,), max_bytes, "xz"
-        )
-    elif codec == "zstd":
-        _one = _make_zstd_one(max_bytes)
-    elif codec == "brotli":
-        _one = _make_brotli_one(max_bytes)
     else:
         raise NotImplementedError(
-            f"codec {codec!r}: gzip/zlib/raw-deflate/bz2/xz supported, "
-            "zstd/brotli where their modules exist"
+            f"codec {codec!r}: gzip/zlib/raw-deflate/bz2/xz/zstd/brotli "
+            "supported"
         )
 
     target = out_col or payload_col

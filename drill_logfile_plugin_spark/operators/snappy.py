@@ -1,21 +1,16 @@
-"""Snappy decoding (raw, framing format, Hadoop block format) from
-the published specs.
+"""Snappy decoding: raw, framing format, Hadoop block format.
 
 Snappy is the default codec of a large share of Hadoop-era corpus
 exports (SequenceFile/``.snappy`` part files) and the framing format
-(``.sz``) shows up in log shippers; the stdlib has no codec. All
-three published layouts decode here from the spec text (the snappy
-repository's format_description.txt and framing_format.txt; the
-Hadoop BlockCompressorStream layout), pinned against an independent
-in-test ENCODER and the published CRC-32C check value.
+(``.sz``) shows up in log shippers.
 
-* **Raw format**: varint32 uncompressed-length preamble, then tagged
-  elements — literals (6-bit length with 1-4 byte extensions) and
-  three copy forms (1-byte-offset/len 4-11, 2-byte-offset, 4-byte-
-  offset), overlap-capable. Structure errors are ValueError; the
-  declared length is bounded BEFORE decoding and the output must
-  match it exactly.
-* **Framing format** (``.sz``): the ``\\xff`` stream-identifier chunk
+* **Raw format**: libsnappy through pyarrow's ``snappy`` codec. The
+  varint32 uncompressed-length preamble is read here and bounded by
+  the caller's cap BEFORE anything is allocated; libsnappy then
+  decodes exactly that many bytes, and any structure error is
+  ValueError.
+* **Framing format** (``.sz``), from framing_format.txt, because
+  pyarrow has no API for it: the ``\\xff`` stream-identifier chunk
   ("sNaPpY"), compressed (0x00) and uncompressed (0x01) data chunks
   carrying a MASKED CRC-32C of the uncompressed data — verified —
   padding (0xFE) and skippable (0x80-0xFD) chunks skipped,
@@ -25,6 +20,9 @@ in-test ENCODER and the published CRC-32C check value.
   per-subchunk big-endian compressed lengths — the layout
   ``BlockCompressorStream`` writes inside part files. No magic, so
   this lane is extension-routed only (never sniffed).
+
+``crc32c`` (pinned to the published check value) is also the TFRecord
+framing checksum.
 
 Untrusted-input contract as everywhere: declared sizes bounded before
 allocation, inflation stops at the caller's cap, corrupt structure is
@@ -78,64 +76,19 @@ def _read_varint32(src: bytes, i: int) -> tuple[int, int]:
 
 
 def snappy_raw_decompress(src: bytes, max_out: int) -> bytes:
-    """Decode one raw snappy payload (format_description.txt)."""
-    declared, i = _read_varint32(src, 0)
+    """Decode one raw snappy payload (format_description.txt) whose
+    declared length is at most ``max_out``."""
+    import pyarrow as pa
+
+    declared, _ = _read_varint32(src, 0)
     if declared > max_out:
         raise ValueError("snappy declared size exceeds the bound")
-    out = bytearray()
-    n = len(src)
-    while i < n:
-        tag = src[i]
-        i += 1
-        kind = tag & 0x3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:  # 60..63 -> 1..4 extra length bytes
-                extra = ln - 59
-                if i + extra > n:
-                    raise ValueError("snappy literal length truncated")
-                ln = int.from_bytes(src[i : i + extra], "little")
-                i += extra
-            ln += 1
-            if i + ln > n:
-                raise ValueError("snappy literal truncated")
-            out += src[i : i + ln]
-            i += ln
-        else:
-            if kind == 1:  # copy, 1-byte offset, len 4..11
-                ln = ((tag >> 2) & 0x7) + 4
-                if i >= n:
-                    raise ValueError("snappy copy1 truncated")
-                offset = ((tag >> 5) << 8) | src[i]
-                i += 1
-            elif kind == 2:  # copy, 2-byte little-endian offset
-                ln = (tag >> 2) + 1
-                if i + 2 > n:
-                    raise ValueError("snappy copy2 truncated")
-                offset = int.from_bytes(src[i : i + 2], "little")
-                i += 2
-            else:  # copy, 4-byte little-endian offset
-                ln = (tag >> 2) + 1
-                if i + 4 > n:
-                    raise ValueError("snappy copy4 truncated")
-                offset = int.from_bytes(src[i : i + 4], "little")
-                i += 4
-            if offset == 0 or offset > len(out):
-                raise ValueError("snappy copy offset outside the window")
-            start = len(out) - offset
-            if offset >= ln:
-                out += out[start : start + ln]
-            else:
-                pattern = bytes(out[start:])
-                out += (pattern * (ln // offset + 1))[:ln]
-        if len(out) > declared:
-            raise ValueError("snappy output exceeds its declared size")
-    if len(out) != declared:
-        raise ValueError(
-            "snappy output does not match the declared size "
-            f"({len(out)} != {declared})"
+    try:
+        return pa.Codec("snappy").decompress(
+            src, decompressed_size=declared, asbytes=True
         )
-    return bytes(out)
+    except (OSError, pa.ArrowException) as ex:
+        raise ValueError(f"bad snappy data: {ex}") from ex
 
 
 _SNAPPY_FRAME_MAGIC = b"\xff\x06\x00\x00sNaPpY"

@@ -8,7 +8,7 @@ jars but not the ``spark-avro`` datasource module, so
 Python avro binding is installed — yet ``.avro`` part files are a
 data-lake staple right beside the SequenceFiles this round also
 covers. The container layout and binary encoding are small and fully
-specified, the same in-scope judgment as LZ4/snappy.
+specified.
 
 Implemented, stated plainly:
 
@@ -18,9 +18,9 @@ Implemented, stated plainly:
   compressed record bytes, sync marker VERIFIED per block).
 * **Codecs**: ``null``, ``deflate`` (RAW deflate per spec),
   ``snappy`` (raw snappy + the spec's 4-byte big-endian CRC32 of the
-  UNCOMPRESSED bytes, verified — decoded by the repo's own
+  UNCOMPRESSED bytes, verified — decoded by libsnappy through
   operators/snappy.py), ``bzip2``, ``xz`` (stdlib, bounded),
-  ``zstandard`` (import-guarded like every zstd lane). Unknown codec
+  ``zstandard`` (pyarrow's libzstd, bounded). Unknown codec
   names are a named absence.
 * **Binary encoding**: null/boolean/int/long (zigzag varint)/float/
   double/bytes/string/fixed/enum (symbol index -> name)/array + map
@@ -321,9 +321,9 @@ def _codec_fn(name: str):
 
         return lambda p, cap: bounded_decompress_bytes(p, "xz", cap)
     if name == "zstandard":
-        from ..operators.multimodal import _make_zstd_one
+        from ..operators.multimodal import bounded_decompress_bytes
 
-        return lambda p, cap: _make_zstd_one(cap)(p)
+        return lambda p, cap: bounded_decompress_bytes(p, "zstd", cap)
     raise NotImplementedError(f"avro codec {name!r} has no decoder")
 
 

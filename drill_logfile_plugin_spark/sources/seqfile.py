@@ -27,12 +27,13 @@ Format, as implemented:
   four vint-length-prefixed codec-compressed buffers (key lengths,
   keys, value lengths, values), the length buffers holding one vint
   per record. Hadoop's zero-compressed vint encoding throughout.
-* Codecs: Default (zlib), Gzip, BZip2 (stdlib, bounded via the shared
-  streaming helpers), Snappy and Lz4 (the repo's own spec decoders —
+* Codecs: Default (zlib), Gzip, BZip2 and Zstandard (bounded via
+  ``multimodal.bounded_decompress_bytes``: gzip and zstd through
+  pyarrow, bz2 through the stdlib), Snappy and Lz4 (Hadoop wraps both
+  in its BlockCompressorStream layout, decoded by
   operators/snappy.py ``hadoop_snappy_decompress`` /
-  operators/lz4.py ``hadoop_lz4_decompress``: Hadoop wraps both in
-  its BlockCompressorStream layout), Zstandard (import-guarded like
-  every zstd lane). Unknown codec class names are a named absence.
+  operators/lz4.py ``hadoop_lz4_decompress``). Unknown codec class
+  names are a named absence.
 * Writable payloads: the stored bytes ARE the serialized writable.
   ``maybe_text`` decodes the common classes to text — Text (vint +
   UTF-8), BytesWritable (4-byte BE + bytes), Long/IntWritable
@@ -139,9 +140,7 @@ def _decompressor(codec_class: str):
 
         return hadoop_lz4_decompress
     if short == "ZStandardCodec":
-        from ..operators.multimodal import _make_zstd_one
-
-        return lambda p, cap: _make_zstd_one(cap)(p)
+        return lambda p, cap: bounded_decompress_bytes(p, "zstd", cap)
     raise NotImplementedError(
         f"sequencefile codec {codec_class!r} has no decoder in this "
         "environment"

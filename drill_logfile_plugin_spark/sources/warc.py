@@ -20,8 +20,10 @@ unit of parallelism is the segment file — each gzip member must be
 decompressed sequentially anyway (the format's own constraint, not
 this reader's; the segment inventory is the split inventory).
 ``.warc.gz`` per-record gzip members (the Common Crawl convention —
-each record its own member, members concatenated) decompress with one
-streaming pass; plain ``.warc`` parses directly.
+each record its own member, members concatenated) and ``.warc.zst``
+segments decompress with one bounded streaming pass through pyarrow
+(zstd dictionary frames are unsupported: such a segment is corrupt);
+plain ``.warc`` parses directly.
 
 Dirty-archive posture (the ``on_error`` quarantine convention): a
 malformed record header or a lying Content-Length raises ValueError
@@ -171,39 +173,27 @@ def read_warc(
             out = {k.name: [] for k in WARC_SCHEMA.fields}
             for fpath, blob in zip(pdf["path"], pdf["content"]):
                 data = bytes(blob)
-                if data[:2] == b"\x1f\x8b":
-                    # multi-member gzip: one streaming BOUNDED pass
-                    # inflates every per-record member (the Common Crawl
-                    # layout); the shared helper closes the one-shot
-                    # decompress bomb window here too (r10 — the r9 fix
-                    # covered the document/tar lanes, not this one)
+                # .warc.gz (multi-member, the Common Crawl layout) and
+                # .warc.zst (newer archive crawls) inflate in one
+                # bounded pass, so a bomb costs the cap; corruption
+                # follows the skip/strict contract
+                codec = (
+                    "gzip" if data[:2] == b"\x1f\x8b"
+                    else "zstd" if data[:4] == b"\x28\xb5\x2f\xfd"
+                    else None
+                )
+                if codec:
                     from ..operators.multimodal import (
                         bounded_decompress_bytes,
                     )
 
                     try:
                         data = bounded_decompress_bytes(
-                            data, "gzip", _MAX_WARC_FILE
+                            data, codec, _MAX_WARC_FILE
                         )
-                    except (OSError, ValueError) as ex:
+                    except ValueError as ex:
                         if on_error == "strict":
-                            raise ValueError(
-                                f"{fpath}: bad gzip stream: {ex}"
-                            ) from ex
-                        continue
-                elif data[:4] == b"\x28\xb5\x2f\xfd":
-                    # .warc.zst (newer archive crawls) via the guarded
-                    # bounded zstd lane; absent module / corruption
-                    # follows the same skip/strict contract
-                    from ..operators.multimodal import _make_zstd_one
-
-                    try:
-                        data = _make_zstd_one(_MAX_WARC_FILE)(data)
-                    except (ValueError, NotImplementedError) as ex:
-                        if on_error == "strict":
-                            raise ValueError(
-                                f"{fpath}: zstd WARC: {ex}"
-                            ) from ex
+                            raise ValueError(f"{fpath}: {ex}") from ex
                         continue
                 rec_no = 0
                 gen = parse_warc_records(data)

@@ -9,6 +9,7 @@ import lzma
 import struct
 import zlib
 
+import pyarrow as pa
 import pytest
 
 from drill_logfile_plugin_spark.sources.avro import (
@@ -111,6 +112,7 @@ _WRITER_CODECS = {
     + (zlib.crc32(d) & 0xFFFFFFFF).to_bytes(4, "big"),
     "bzip2": bz2.compress,
     "xz": lzma.compress,
+    "zstandard": lambda d: pa.Codec("zstd").compress(d, asbytes=True),
 }
 
 

@@ -355,25 +355,14 @@ def test_srt_legacy_charset_and_utf16_bom():
 
 
 def test_warc_zst_segment(spark, tmp_path):
-    """A .warc.zst segment parses on EVERY host (r11): native module
-    when installed, else the pure RFC 8878 decoder — the r10
-    skip-without-module behavior is gone."""
-    from drill_logfile_plugin_spark.operators.multimodal import _zstd_module
+    """A .warc.zst segment parses through the bounded zstd lane."""
+    import pyarrow as pa
+
     from drill_logfile_plugin_spark.sources.warc import read_warc
     from tests.test_warc import _http, _record
 
-    mod, flavor = _zstd_module()
     blob = _record(url="https://z.example/a", payload=_http(b"<p>zst</p>"))
-    if mod is None:
-        from tests.test_zstd_dec import _zstd_compress
-
-        comp = _zstd_compress(blob)
-    else:
-        comp = (
-            mod.ZstdCompressor().compress(blob)
-            if flavor == "zstandard"
-            else mod.compress(blob)
-        )
+    comp = pa.Codec("zstd").compress(blob, asbytes=True)
     (tmp_path / "seg.warc.zst").write_bytes(comp)
     rows = read_warc(spark, str(tmp_path)).collect()
     assert len(rows) == 1 and rows[0]["url"] == "https://z.example/a"

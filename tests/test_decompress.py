@@ -1,7 +1,8 @@
-"""decompress_payload: exact roundtrips across all five codecs (stdlib
-compressors as the independent reference), multi-member gzip, the
-decompression-bomb guard (bounded work, named error), the quarantine
-matrix, and NULL passthrough."""
+"""decompress_payload and the bounded primitive behind it: exact
+roundtrips across every codec (stdlib and pyarrow compressors as the
+independent references), multi-member gzip, concatenated and skippable
+zstd frames, the decompression-bomb guard (bounded work, named error),
+the quarantine matrix, and NULL passthrough."""
 
 from __future__ import annotations
 
@@ -10,10 +11,13 @@ import gzip
 import lzma
 import zlib
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
-from drill_logfile_plugin_spark.operators.multimodal import decompress_payload
+from drill_logfile_plugin_spark.operators.multimodal import (
+    bounded_decompress_bytes,
+    decompress_payload,
+)
 
 BODY = b"the quick brown fox " * 200
 
@@ -83,8 +87,8 @@ def test_quarantine_matrix_and_nulls(spark):
     skipped = decompress_payload(df, codec="gzip", on_error="skip").collect()
     # skip drops the CORRUPT row; the NULL row passes through as NULL
     assert {r["doc_id"] for r in skipped} == {0, 2}
-    with pytest.raises(NotImplementedError, match="brotli"):
-        decompress_payload(df, codec="brotli")
+    with pytest.raises(NotImplementedError, match="lz4"):
+        decompress_payload(df, codec="lz4")
     with pytest.raises(ValueError, match="max_bytes"):
         decompress_payload(df, max_bytes=0)
 
@@ -107,23 +111,61 @@ def test_composes_with_decode(spark):
     assert (meta["width"], meta["height"]) == (8, 8)
 
 
-# --- zstd lane (r8; LIVE everywhere as of r11 via the pure RFC 8878
-# decoder — compression uses the native module when present, else the
-# in-test RFC encoder, so these tests never skip) ---
+# --- zstd lane: pyarrow's libzstd, run through the bounded primitive ---
 
-from drill_logfile_plugin_spark.operators.multimodal import _zstd_module
-
-_ZSTD_MOD, _ZSTD_FLAVOR = _zstd_module()
+_ZMAGIC = b"\x28\xb5\x2f\xfd"
 
 
 def _zstd_compress(data: bytes) -> bytes:
-    if _ZSTD_MOD is None:
-        from tests.test_zstd_dec import _zstd_compress as _enc
+    return pa.Codec("zstd").compress(data, asbytes=True)
 
-        return _enc(data)
-    if _ZSTD_FLAVOR == "zstandard":
-        return _ZSTD_MOD.ZstdCompressor().compress(data)
-    return _ZSTD_MOD.compress(data)
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_short(data: bytes) -> int:
+    """xxHash64, seed 0, for inputs under 32 bytes (no stripe loop):
+    the zstd content checksum of the test frames below."""
+    assert len(data) < 32
+    h = (_P5 + len(data)) & _M64
+    i = 0
+    while i + 8 <= len(data):
+        k = int.from_bytes(data[i : i + 8], "little")
+        h ^= (_rotl64(k * _P2 & _M64, 31) * _P1) & _M64
+        h = (_rotl64(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= len(data):
+        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
+        h = (_rotl64(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl64(h, 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _checksummed_raw_frame(data: bytes) -> bytes:
+    """RFC 8878 frame: single segment, 1-byte content size, one raw
+    block, content checksum (libzstd's compressor never sets it)."""
+    block = (1 | (len(data) << 3)).to_bytes(3, "little") + data
+    check = (_xxh64_short(data) & 0xFFFFFFFF).to_bytes(4, "little")
+    return _ZMAGIC + bytes([0x24, len(data)]) + block + check
+
+
+def test_xxh64_published_check_values():
+    assert _xxh64_short(b"") == 0xEF46DB3751D8E999
+    assert _xxh64_short(b"a") == 0xD24EC4F1A98C6E5B
+    assert _xxh64_short(b"abc") == 0x44BC2CF5AD770999
 
 
 def test_zstd_roundtrip_and_quarantine(spark):
@@ -145,88 +187,60 @@ def test_zstd_bomb_guard(spark):
     assert len(bytes(ok[0]["payload"])) == 1 << 20
 
 
-def test_zstd_live_without_module(spark):
-    """r11: with NO native module the pure RFC 8878 decoder carries the
-    lane — a real zstd frame decodes through Spark regardless of what
-    is installed (the r8 absent-module setup error is gone)."""
-    from tests.test_zstd_dec import _zstd_compress as _enc
-
-    df = _df(spark, [_enc(b"pure-decoder payload " * 4)])
-    out = decompress_payload(df, codec="zstd").collect()
-    assert bytes(out[0]["payload"]) == b"pure-decoder payload " * 4
-
-
-class _FakeZstdDec:
-    """zlib.decompressobj dressed in the Python-3.14 compression.zstd
-    incremental API (decompress(data, max_length) / eof / needs_input) —
-    lets this environment EXECUTE the stdlib-flavor bounded loop that
-    would otherwise be dead code until 3.14."""
-
-    def __init__(self):
-        self._d = zlib.decompressobj()
-
-    @property
-    def eof(self):
-        return self._d.eof
-
-    @property
-    def needs_input(self):
-        return not self._d.unconsumed_tail
-
-    def decompress(self, data, max_length):
-        return self._d.decompress(self._d.unconsumed_tail + data, max_length)
+def test_zstd_content_checksum_mismatch():
+    data = b"checksummed content"
+    frame = _checksummed_raw_frame(data)
+    assert bounded_decompress_bytes(frame, "zstd", 1 << 20) == data
+    bad = bytearray(frame)
+    bad[-1] ^= 0xFF
+    with pytest.raises(ValueError, match="checksum"):
+        bounded_decompress_bytes(bytes(bad), "zstd", 1 << 20)
 
 
-class _FakeZstdModule:
-    ZstdDecompressor = _FakeZstdDec
-    ZstdError = zlib.error
-
-
-def test_zstd_stdlib_flavor_bounded_loop(spark, monkeypatch):
-    """The stdlib-flavor lane, driven end-to-end through Spark with the
-    API-faithful fake: roundtrip, bomb stops AT the cap, corrupt and
-    truncated streams quarantine."""
-    from drill_logfile_plugin_spark.operators import multimodal as M
-
-    monkeypatch.setattr(
-        M, "_zstd_module", lambda: (_FakeZstdModule, "stdlib")
+def test_zstd_skippable_and_concatenated_frames():
+    a = _zstd_compress(b"first ")
+    skip = b"\x5a\x2a\x4d\x18" + (3).to_bytes(4, "little") + b"xyz"
+    b = _checksummed_raw_frame(b"second")
+    assert bounded_decompress_bytes(a + skip + b, "zstd", 1 << 20) == (
+        b"first second"
     )
-    good = zlib.compress(b"hello stdlib zstd")
-    bomb = zlib.compress(b"\x00" * (1 << 20))
-    df = _df(spark, [good, b"garbage", good[: len(good) // 2], None])
-    got = {
-        r["doc_id"]: r["payload"]
-        for r in M.decompress_payload(df, codec="zstd").collect()
-    }
-    assert bytes(got[0]) == b"hello stdlib zstd"
-    assert got[1] is None  # corrupt -> quarantined
-    assert got[2] is None  # truncated -> quarantined
-    assert got[3] is None  # NULL-through
-    out = M.decompress_payload(
-        _df(spark, [bomb]), codec="zstd", max_bytes=1024
-    ).collect()
-    assert out[0]["payload"] is None
-    ok = M.decompress_payload(
-        _df(spark, [bomb]), codec="zstd", max_bytes=1 << 21
-    ).collect()
-    assert len(bytes(ok[0]["payload"])) == 1 << 20
+
+
+def test_zstd_rejections():
+    good = _zstd_compress(b"the quick brown fox jumps over the lazy dog " * 40)
+    with pytest.raises(ValueError, match="Unknown frame descriptor"):
+        bounded_decompress_bytes(b"\xde\xad\xbe\xef rest", "zstd", 1 << 20)
+    with pytest.raises(ValueError, match="Truncated"):
+        bounded_decompress_bytes(good[:-9], "zstd", 1 << 20)
+    with pytest.raises(ValueError, match="bad zstd"):
+        bounded_decompress_bytes(good + b"garbage", "zstd", 1 << 20)
+    with pytest.raises(ValueError, match="exceeds max_bytes"):
+        bounded_decompress_bytes(good, "zstd", 10)
+
+
+def test_zstd_dictionary_frames_quarantine():
+    """Dictionary frames are unsupported: one that names a dictionary
+    is corrupt, also behind a skippable frame carrying a dictionary
+    (the .warc.zst convention), which is skipped unread."""
+    frame = _ZMAGIC + bytes([0x01, 0x50, 0x07]) + b"\x01\x00\x00"
+    skip = b"\x5d\x2a\x4d\x18" + (4).to_bytes(4, "little") + b"dict"
+    for payload in (frame, skip + frame):
+        with pytest.raises(ValueError, match="Dictionary mismatch"):
+            bounded_decompress_bytes(payload, "zstd", 1 << 20)
 
 
 # --- streaming bounded bz2/xz (r9): the one-shot decompress bomb window ---
 
-from drill_logfile_plugin_spark.operators.multimodal import (  # noqa: E402
-    bounded_decompress_bytes,
-)
-
-
 @pytest.mark.parametrize(
     "codec,compress",
-    [("gzip", gzip.compress), ("bz2", bz2.compress), ("xz", lzma.compress)],
+    [("gzip", gzip.compress), ("bz2", bz2.compress), ("xz", lzma.compress),
+     ("zstd", _zstd_compress),
+     ("lz4", lambda b: pa.Codec("lz4").compress(b, asbytes=True))],
 )
 def test_bounded_bytes_roundtrip_and_cap(codec, compress):
-    """r9 ADVICE fix: bz2/xz previously inflated FULLY before the size
-    check (one-shot stdlib decompress). The shared streaming helper
-    stops AT the cap via decompressobj/max_length."""
+    """bz2/xz once inflated FULLY before the size check (one-shot
+    stdlib decompress). The shared streaming primitive stops AT the cap
+    on every lane."""
     assert bounded_decompress_bytes(compress(BODY), codec, 1 << 20) == BODY
     bomb = compress(b"\x00" * (1 << 20))  # tiny payload, 1 MiB inflated
     with pytest.raises(ValueError, match="exceeds max_bytes"):
@@ -268,90 +282,84 @@ def test_bz2_xz_spark_bomb_guard(spark):
         assert bytes(rows[1]["payload"]) == b"fine"
 
 
-# --- brotli lane (r9): guarded-import — fake executes the bounded loop ---
-
-from drill_logfile_plugin_spark.operators.multimodal import _brotli_module  # noqa: E402
-
-_BROTLI_MOD = _brotli_module()
+# --- brotli lane: pyarrow's bundled brotli ---
 
 
-@pytest.mark.skipif(_BROTLI_MOD is None, reason="no brotli module available")
+def _brotli_compress(data: bytes) -> bytes:
+    return pa.Codec("brotli").compress(data, asbytes=True)
+
+
 def test_brotli_roundtrip_live(spark):
-    df = _df(spark, [_BROTLI_MOD.compress(BODY), b"not brotli", None])
+    bomb = _brotli_compress(b"\x00" * (1 << 20))
+    good = _brotli_compress(BODY)
+    df = _df(spark, [good, b"not brotli", None, good[: len(good) // 2], bomb])
     got = {
         r["doc_id"]: r["payload"]
-        for r in decompress_payload(df, codec="brotli").collect()
-    }
-    assert bytes(got[0]) == BODY and got[1] is None and got[2] is None
-
-
-@pytest.mark.skipif(
-    _BROTLI_MOD is not None, reason="brotli module present — lane is live"
-)
-def test_brotli_absent_is_actionable(spark):
-    df = _df(spark, [b"x"])
-    with pytest.raises(NotImplementedError, match="brotlicffi"):
-        decompress_payload(df, codec="brotli")
-
-
-class _FakeBrotliDec:
-    """zlib.decompressobj dressed in the brotli ``Decompressor`` API
-    (process(data, output_buffer_limit=) / is_finished()) so this
-    environment EXECUTES the bounded brotli loop end-to-end."""
-
-    def __init__(self):
-        self._d = zlib.decompressobj()
-
-    def is_finished(self):
-        return self._d.eof
-
-    def process(self, data, output_buffer_limit=None):
-        if output_buffer_limit is None:
-            return self._d.decompress(self._d.unconsumed_tail + data)
-        return self._d.decompress(
-            self._d.unconsumed_tail + data, output_buffer_limit
-        )
-
-
-class _FakeBrotliLegacyDec(_FakeBrotliDec):
-    """Pre-1.1 binding: no output_buffer_limit kwarg — exercises the
-    slice-level fallback path."""
-
-    def process(self, data, **kw):
-        if kw:
-            raise TypeError("process() got an unexpected keyword argument")
-        return self._d.decompress(self._d.unconsumed_tail + data)
-
-
-def _fake_brotli_module(dec_cls):
-    class _Mod:
-        Decompressor = dec_cls
-        error = zlib.error
-    return _Mod
-
-
-@pytest.mark.parametrize("dec_cls", [_FakeBrotliDec, _FakeBrotliLegacyDec])
-def test_brotli_bounded_loop_via_fake(spark, monkeypatch, dec_cls):
-    from drill_logfile_plugin_spark.operators import multimodal as M
-
-    monkeypatch.setattr(
-        M, "_brotli_module", lambda: _fake_brotli_module(dec_cls)
-    )
-    good = zlib.compress(b"hello brotli lane")
-    bomb = zlib.compress(b"\x00" * (1 << 20))
-    df = _df(spark, [good, b"garbage", good[: len(good) // 2], None, bomb])
-    got = {
-        r["doc_id"]: r["payload"]
-        for r in M.decompress_payload(
+        for r in decompress_payload(
             df, codec="brotli", max_bytes=1 << 16
         ).collect()
     }
-    assert bytes(got[0]) == b"hello brotli lane"
+    assert bytes(got[0]) == BODY
     assert got[1] is None  # corrupt -> quarantined
-    assert got[2] is None  # truncated -> quarantined
-    assert got[3] is None  # NULL-through
+    assert got[2] is None  # NULL-through
+    assert got[3] is None  # truncated -> quarantined
     assert got[4] is None  # bomb -> quarantined at the cap
-    ok = M.decompress_payload(
-        _df(spark, [bomb]), codec="brotli", max_bytes=1 << 21
-    ).collect()
-    assert len(bytes(ok[0]["payload"])) == 1 << 20
+    with pytest.raises(ValueError, match="Truncated"):
+        bounded_decompress_bytes(good[: len(good) // 2], "brotli", 1 << 20)
+    with pytest.raises(ValueError, match="exceeds max_bytes"):
+        bounded_decompress_bytes(bomb, "brotli", 1 << 16)
+    assert len(bounded_decompress_bytes(bomb, "brotli", 1 << 21)) == 1 << 20
+
+
+# --- every lane: empty input, corrupt input, many gzip members ---
+
+
+@pytest.mark.parametrize(
+    "codec,want",
+    [("gzip", b""), ("bz2", b""), ("xz", b""),
+     ("zstd", None), ("lz4", None), ("brotli", None)],
+)
+def test_empty_payload_per_lane(codec, want):
+    if want is None:
+        with pytest.raises(ValueError, match="empty"):
+            bounded_decompress_bytes(b"", codec, 1 << 20)
+    else:
+        assert bounded_decompress_bytes(b"", codec, 1 << 20) == want
+
+
+def test_gzip_many_members_linear_time():
+    """32k members (the per-record .warc.gz layout, 8.9 MB) decode in
+    one pass: restarting a decompressor on the remaining input per
+    member copies that input per member, which took ~22 s here."""
+    import random
+    import time
+
+    rng = random.Random(0)
+    bodies = [rng.randbytes(256) for _ in range(32_000)]
+    blob = b"".join(gzip.compress(b, mtime=0) for b in bodies)
+    t0 = time.perf_counter()
+    out = bounded_decompress_bytes(blob, "gzip", 1 << 30)
+    assert time.perf_counter() - t0 < 5
+    assert out == b"".join(bodies)
+
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+
+@settings(max_examples=80, deadline=None)
+@given(noise=st.binary(min_size=1, max_size=400))
+def test_fuzz_corrupt_never_hangs_or_miscrashes(noise):
+    """Garbage, bare or behind a codec's magic, is ValueError out (or
+    a bounded decode of a frame noise happens to complete); never a
+    hang or a foreign exception type."""
+    for codec, magic in (
+        ("gzip", b"\x1f\x8b\x08\x00"),
+        ("zstd", _ZMAGIC),
+        ("lz4", b"\x04\x22\x4d\x18"),
+        ("brotli", b""),
+    ):
+        for payload in (noise, magic + noise):
+            try:
+                bounded_decompress_bytes(payload, codec, 1 << 16)
+            except ValueError:
+                pass

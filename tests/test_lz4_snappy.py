@@ -1,15 +1,20 @@
-"""LZ4 + snappy decoders (r11): published-spec decode pinned against
-independent in-test ENCODERS (a greedy LZ4 block compressor and a
-greedy snappy compressor written here from the same spec text, sharing
-no code with the decoders) plus the published known-answer vectors
-(xxHash32 check values; the CRC-32C standard check)."""
+"""LZ4 + snappy lanes. Standard LZ4 frames and raw snappy decode
+through pyarrow's liblz4 / libsnappy; the LZ4 block decoder, the legacy
+frame, snappy framing and both Hadoop block layouts stay hand-written.
+Everything is pinned against independent in-test ENCODERS (a greedy
+LZ4 block compressor, a frame writer with every FLG option, and a
+greedy snappy compressor, written from the published specs), against
+pyarrow's reference encoders (``lz4_raw`` / ``snappy``), and against the
+published known-answer vectors (xxHash32 check values; the CRC-32C
+standard check)."""
 
+import pyarrow as pa
 import pytest
 
 from drill_logfile_plugin_spark.operators.lz4 import (
+    hadoop_lz4_decompress,
     lz4_block_decompress,
     lz4_frame_decompress,
-    xxh32,
 )
 from drill_logfile_plugin_spark.operators.snappy import (
     crc32c,
@@ -17,6 +22,43 @@ from drill_logfile_plugin_spark.operators.snappy import (
     snappy_framed_decompress,
     snappy_raw_decompress,
 )
+
+_M32 = 0xFFFFFFFF
+_P32 = (2654435761, 2246822519, 3266489917, 668265263, 374761393)
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def xxh32(data: bytes, seed: int = 0) -> int:
+    """xxHash32 (the published algorithm): the frame writer's header,
+    block and content checksums, which liblz4 verifies on decode."""
+    p1, p2, p3, p4, p5 = _P32
+    n = len(data)
+    i = 0
+    if n >= 16:
+        acc = [(seed + p1 + p2) & _M32, (seed + p2) & _M32, seed & _M32,
+               (seed - p1) & _M32]
+        while i <= n - 16:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 4 * j : i + 4 * j + 4], "little")
+                acc[j] = (_rotl32((acc[j] + lane * p2) & _M32, 13) * p1) & _M32
+            i += 16
+        h = sum(_rotl32(v, r) for v, r in zip(acc, (1, 7, 12, 18))) & _M32
+    else:
+        h = (seed + p5) & _M32
+    h = (h + n) & _M32
+    while i + 4 <= n:
+        lane = int.from_bytes(data[i : i + 4], "little")
+        h = (_rotl32((h + lane * p3) & _M32, 17) * p4) & _M32
+        i += 4
+    for b in data[i:]:
+        h = (_rotl32((h + b * p5) & _M32, 11) * p1) & _M32
+    h = ((h ^ (h >> 15)) * p2) & _M32
+    h = ((h ^ (h >> 13)) * p3) & _M32
+    return h ^ (h >> 16)
+
 
 # ---------------------------------------------------------------- samples
 
@@ -200,12 +242,15 @@ def _masked(data: bytes) -> bytes:
     )
 
 
-def _snappy_frame(data: bytes, chunk: int = 65536, compress: bool = True) -> bytes:
+def _snappy_frame(
+    data: bytes, chunk: int = 65536, compress: bool = True,
+    enc=_snappy_compress_raw,
+) -> bytes:
     out = bytearray(b"\xff\x06\x00\x00sNaPpY")
     for off in range(0, len(data), chunk):
         block = data[off : off + chunk]
         if compress:
-            body = _masked(block) + _snappy_compress_raw(block)
+            body = _masked(block) + enc(block)
             out.append(0x00)
         else:
             body = _masked(block) + block
@@ -215,13 +260,17 @@ def _snappy_frame(data: bytes, chunk: int = 65536, compress: bool = True) -> byt
     return bytes(out)
 
 
-def _hadoop_snappy(data: bytes, block: int = 4096, sub: int = 1024) -> bytes:
+def _hadoop_snappy(
+    data: bytes, block: int = 4096, sub: int = 1024, enc=_snappy_compress_raw
+) -> bytes:
+    """Hadoop BlockCompressorStream layout; ``enc`` compresses each
+    subchunk (the Lz4Codec layout is the same with an LZ4 block)."""
     out = bytearray()
     for off in range(0, len(data), block):
         b = data[off : off + block]
         out += len(b).to_bytes(4, "big")
         for soff in range(0, len(b), sub):
-            comp = _snappy_compress_raw(b[soff : soff + sub])
+            comp = enc(b[soff : soff + sub])
             out += len(comp).to_bytes(4, "big")
             out += comp
     return bytes(out)
@@ -295,12 +344,13 @@ def test_lz4_linked_blocks_cross_block_match():
     b1 = bytes([8 << 4]) + b"abcdefgh"  # literal-only block
     frame += len(b1).to_bytes(4, "little") + b1
     # block 2: zero literals, match offset 8 len 8 (from block 1), then
-    # final literal-only token "!" — wait: end rule is encoder-side;
-    # the decoder accepts a trailing literal token of 1.
-    b2 = bytes([(0 << 4) | 4]) + (8).to_bytes(2, "little") + bytes([1 << 4]) + b"!"
+    # the final literal-only token; liblz4 holds blocks to the spec's
+    # end rules (last 5 bytes literals, last match >= 12 bytes from
+    # the end)
+    b2 = bytes([(0 << 4) | 4]) + (8).to_bytes(2, "little") + bytes([5 << 4]) + b"!tail"
     frame += len(b2).to_bytes(4, "little") + b2
     frame += b"\x00\x00\x00\x00"
-    assert lz4_frame_decompress(bytes(frame), 1000) == b"abcdefghabcdefgh!"
+    assert lz4_frame_decompress(bytes(frame), 1000) == b"abcdefghabcdefgh!tail"
 
 
 def test_lz4_concatenated_and_skippable_frames():
@@ -347,6 +397,40 @@ def test_hadoop_snappy_roundtrip():
         )
 
 
+#: ~300 kB of access-log lines: the multi-block size the reference
+#: encoders are checked at, beside SAMPLES
+LOG_SAMPLE = b"".join(
+    b'10.0.%d.%d - - [20/Oct/2026:17:%02d:%02d +0000] "GET /api/items/%d '
+    b'HTTP/1.1" %d %d\n'
+    % (i % 256, i * 7 % 256, i // 60 % 60, i % 60, i * 31 % 10007,
+       (200, 304, 404)[i % 3], i * 13 % 5000)
+    for i in range(3500)
+)
+
+
+def _pa_raw(codec):
+    return lambda b: pa.Codec(codec).compress(b, asbytes=True)
+
+
+@pytest.mark.parametrize(
+    "sample", SAMPLES + [LOG_SAMPLE], ids=[*map(str, range(len(SAMPLES))), "log"]
+)
+def test_kept_decoders_match_reference_encoders(sample):
+    """The hand-written decoders invert liblz4's raw-block and
+    libsnappy's encoders (through pyarrow) byte for byte."""
+    lz4_raw, snappy_raw = _pa_raw("lz4_raw"), _pa_raw("snappy")
+    block = lz4_raw(sample)
+    assert lz4_block_decompress(block, len(sample)) == sample
+    legacy = b"\x02\x21\x4c\x18" + len(block).to_bytes(4, "little") + block
+    assert lz4_frame_decompress(legacy, len(sample)) == sample
+    hadoop_lz4 = _hadoop_snappy(sample, 65536, 16384, enc=lz4_raw)
+    assert hadoop_lz4_decompress(hadoop_lz4, len(sample)) == sample
+    hadoop_snappy = _hadoop_snappy(sample, 65536, 16384, enc=snappy_raw)
+    assert hadoop_snappy_decompress(hadoop_snappy, len(sample)) == sample
+    framed = _snappy_frame(sample, enc=snappy_raw)
+    assert snappy_framed_decompress(framed, len(sample)) == sample
+
+
 # ------------------------------------------------------------ rejections
 
 def test_lz4_frame_rejections():
@@ -354,33 +438,35 @@ def test_lz4_frame_rejections():
     # header checksum
     bad = bytearray(good)
     bad[6] ^= 0xFF
-    with pytest.raises(ValueError, match="header checksum"):
+    with pytest.raises(ValueError, match="ERROR_headerChecksum_invalid"):
         lz4_frame_decompress(bytes(bad), 1000)
     # version bits
-    with pytest.raises(ValueError, match="version"):
+    with pytest.raises(ValueError, match="ERROR_headerVersion_wrong"):
         lz4_frame_decompress(b"\x04\x22\x4d\x18" + bytes([0b10000000, 0x40, 0]), 1000)
     # unknown magic
-    with pytest.raises(ValueError, match="unrecognized"):
+    with pytest.raises(ValueError, match="ERROR_frameType_unknown"):
         lz4_frame_decompress(b"\xde\xad\xbe\xefrest", 1000)
     # truncation
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="Truncated compressed stream"):
         lz4_frame_decompress(good[:-3], 1000)
     # content checksum
     sick = bytearray(_lz4_frame(b"payload", c_checksum=True))
     sick[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="content checksum"):
+    with pytest.raises(ValueError, match="ERROR_contentChecksum_invalid"):
         lz4_frame_decompress(bytes(sick), 1000)
     # block checksum
     sick = bytearray(_lz4_frame(b"payload", b_checksum=True))
     sick[-5] ^= 0xFF  # last block checksum byte (before EndMark)
-    with pytest.raises(ValueError, match="block checksum"):
+    with pytest.raises(ValueError, match="ERROR_blockChecksum_invalid"):
         lz4_frame_decompress(bytes(sick), 1000)
 
 
-def test_lz4_dict_frame_is_named_absence():
+def test_lz4_dict_frame_is_rejected():
+    """A frame naming a dictionary (DictID set) cannot decode here:
+    this header-only one is corrupt like any other."""
     hdr = bytes([0b01100001, 4 << 4]) + (7).to_bytes(4, "little")
     frame = b"\x04\x22\x4d\x18" + hdr + bytes([(xxh32(hdr) >> 8) & 0xFF])
-    with pytest.raises(NotImplementedError, match="dictionary"):
+    with pytest.raises(ValueError, match="bad lz4 stream"):
         lz4_frame_decompress(frame, 1000)
 
 
@@ -395,24 +481,30 @@ def test_lz4_block_structure_rejections():
 
 def test_lz4_bomb_stops_at_cap():
     frame = _lz4_frame(b"\x00" * 200000, chunk=65536)
-    with pytest.raises(ValueError, match="bound"):
+    with pytest.raises(ValueError, match="exceeds max_bytes"):
         lz4_frame_decompress(frame, 1000)
-    # declared content size beyond the cap rejects before any block work
     frame = _lz4_frame(b"\x00" * 200000, c_size=True)
-    with pytest.raises(ValueError, match="bound"):
+    with pytest.raises(ValueError, match="exceeds max_bytes"):
         lz4_frame_decompress(frame, 1000)
+    # the hand-decoded legacy frame honours the same cap
+    with pytest.raises(ValueError, match="bound"):
+        lz4_frame_decompress(_lz4_legacy(b"\x00" * 200000), 1000)
 
 
 def test_snappy_rejections():
     comp = _snappy_compress_raw(b"hello hello hello hello")
     with pytest.raises(ValueError, match="bound"):
         snappy_raw_decompress(comp, 4)
-    with pytest.raises(ValueError, match="declared size"):
+    # output past the declared size, truncation, an offset outside the
+    # window: libsnappy names all three "Corrupt"
+    with pytest.raises(ValueError, match="Corrupt snappy"):
         snappy_raw_decompress(comp + bytes([0 << 2]) + b"x", 100)
-    with pytest.raises(ValueError, match="truncated"):
+    with pytest.raises(ValueError, match="Corrupt snappy"):
         snappy_raw_decompress(comp[:-2], 100)
-    with pytest.raises(ValueError, match="outside the window"):
+    with pytest.raises(ValueError, match="Corrupt snappy"):
         snappy_raw_decompress(bytes([6, 1 << 2]) + b"ab" + bytes([1, 9]), 100)
+    with pytest.raises(ValueError, match="varint truncated"):
+        snappy_raw_decompress(b"", 100)
     frame = bytearray(_snappy_frame(b"some text to protect"))
     frame[-1] ^= 0xFF
     with pytest.raises(ValueError, match="CRC"):
@@ -535,8 +627,6 @@ def test_fuzz_corrupt_quarantines_cleanly(noise):
         try:
             lz4_frame_decompress(payload, 1 << 16)
         except ValueError:
-            pass
-        except NotImplementedError:
             pass
     try:
         snappy_raw_decompress(noise, 1 << 16)

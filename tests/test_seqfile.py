@@ -9,6 +9,7 @@ import bz2
 import gzip
 import zlib
 
+import pyarrow as pa
 import pytest
 
 from drill_logfile_plugin_spark.sources.seqfile import (
@@ -71,6 +72,9 @@ _CODECS = {
         len(d).to_bytes(4, "big")
         + len(_lz4_compress_block(d)).to_bytes(4, "big")
         + _lz4_compress_block(d)
+    ),
+    "org.apache.hadoop.io.compress.ZStandardCodec": lambda d: (
+        pa.Codec("zstd").compress(d, asbytes=True)
     ),
 }
 

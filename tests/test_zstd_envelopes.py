@@ -1,39 +1,26 @@
 """zstd document envelopes + .tar.zst: the `.jsonl.zst` / `.html.zst`
 shipping format of the modern public corpora (The Pile, RedPajama,
 Dolma) routes through the bounded zstd lane — magic ``28 B5 2F FD``
-in the document router's envelope table and the archive tier's
-tar-envelope table.
-
-As of r11 the lane is LIVE on every host: a native module is used
-when present, else the pure-Python RFC 8878 decoder
-(operators/zstd_dec.py). These tests compress with the native module
-when available — which then also cross-validates the in-test RFC
-encoder from tests/test_zstd_dec.py — and with that in-test encoder
-otherwise, so nothing here ever skips."""
+in the shared envelope sniff (``multimodal.sniff_envelope``) that the
+document router and the archive tier both use. libzstd (bundled with
+pyarrow) decodes, and pyarrow's compressor writes the test frames."""
 
 import io
 import tarfile
 
+import pyarrow as pa
 import pytest
 
 import drill_logfile_plugin_spark.operators.archives as AR
 import drill_logfile_plugin_spark.operators.documents as DOC
-from drill_logfile_plugin_spark.operators.multimodal import _zstd_module
-from tests.test_zstd_dec import _zstd_compress
 
-_ZSTD_MOD, _ZSTD_FLAVOR = _zstd_module()
 _MAGIC = b"\x28\xb5\x2f\xfd"
 
 
 @pytest.fixture
 def zstd_lane():
-    """Real-format compression callable: the native module when
-    present, else the in-test RFC 8878 encoder."""
-    if _ZSTD_MOD is not None:
-        if _ZSTD_FLAVOR == "zstandard":
-            return lambda b: _ZSTD_MOD.ZstdCompressor().compress(b)
-        return _ZSTD_MOD.compress
-    return _zstd_compress
+    """Real-format compression callable."""
+    return lambda b: pa.Codec("zstd").compress(b, asbytes=True)
 
 
 # --- document router -----------------------------------------------------------
@@ -84,41 +71,16 @@ def test_corrupt_zst_quarantines(zstd_lane):
         DOC._extract_one("gz:txt", _MAGIC + b"\xde\xad\xbe\xef" * 8)
 
 
-def test_zst_document_row_is_live_through_spark(spark):
-    """The round-10 absent-module quarantine is gone: a .zst document
-    row decodes through the Spark lane on ANY host (native module or
-    the pure RFC 8878 decoder) — the lane is live, never a skip."""
+def test_zst_document_row_is_live_through_spark(spark, zstd_lane):
+    """A .zst document row decodes through the Spark lane."""
     text = (
         "The zstd envelope now decodes everywhere, with sentences "
         "that read like an ordinary paragraph of prose. " * 3
     )
-    payload = _zstd_compress(text.encode())
+    payload = zstd_lane(text.encode())
     df = spark.createDataFrame(
         [(0, bytearray(payload))], "doc_id long, payload binary"
     )
     out = DOC.extract_document_text(df).collect()
     assert out[0]["text"] is not None
     assert "decodes everywhere" in out[0]["text"]
-
-
-def test_native_module_cross_validates_intest_encoder():
-    """When a native zstd exists, it must decode the in-test RFC
-    encoder's frames byte-exactly (reference cross-validation); with
-    no module this degenerates to the pure-decoder roundtrip, which
-    tests/test_zstd_dec.py already pins."""
-    data = b"cross validation payload, repeated twice. " * 20
-    frame = _zstd_compress(data)
-    if _ZSTD_MOD is None:
-        from drill_logfile_plugin_spark.operators.zstd_dec import (
-            zstd_decompress,
-        )
-
-        assert zstd_decompress(frame, 1 << 20) == data
-        return
-    if _ZSTD_FLAVOR == "zstandard":
-        got = _ZSTD_MOD.ZstdDecompressor().decompress(
-            frame, max_output_size=1 << 20
-        )
-    else:
-        got = _ZSTD_MOD.decompress(frame)
-    assert got == data

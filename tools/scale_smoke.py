@@ -1185,7 +1185,7 @@ def main() -> None:
     # MaxMatch fold (model fit once on a bounded sample, outside the
     # timed body); blocklist_literal is the create_map literal path
     # (zero exchange beyond the rollup); lz4_envelope times the
-    # from-scratch LZ4 frame decode inside the document router's
+    # LZ4 frame decode (liblz4 via pyarrow) inside the document router's
     # Python lane — one fixed frame per row keeps per-row work
     # constant, so the factor is the linearity of the decode path.
     from drill_logfile_plugin_spark.operators.blocklist import (
@@ -1228,10 +1228,7 @@ def main() -> None:
     timed.append(("blocklist_literal", blocklist_lane))
 
     def lz4_envelope_lane(spark, sf_dir):
-        import sys as _sys
-
-        _sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-        from tests.test_lz4_snappy import _lz4_frame
+        import pyarrow as pa
 
         from drill_logfile_plugin_spark.operators.documents import (
             extract_document_text,
@@ -1241,7 +1238,7 @@ def main() -> None:
             "A page that arrived as an lz4 frame envelope. Plain prose "
             "with ordinary stopword density so the classifier keeps it. "
         ) * 20
-        frame = bytearray(_lz4_frame(body.encode()))
+        frame = bytearray(pa.Codec("lz4").compress(body.encode(), asbytes=True))
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         payloads = docs.select("doc_id", F.lit(frame).alias("payload"))
         return extract_document_text(payloads).agg(
